@@ -4,7 +4,7 @@ l_shipmode — see TESTDATA.md). Each adaptation preserves the
 *structural pattern* that makes the original query interesting:
 
   Q2  — correlated MIN subquery joined back (min-cost supplier)
-  Q11 — group share vs a global scalar aggregate (HAVING > fraction)
+  Q11 — group value vs a global scalar aggregate (> multiple of the mean)
   Q12 — conditional counts by category after a late-shipment filter
   Q16 — COUNT(DISTINCT) grouped by part attributes with NOT IN prune
   Q20 — chained semi-joins narrowing suppliers by shipped volume
@@ -91,13 +91,20 @@ WHERE unit_cost = (SELECT min(unit_cost) FROM offers o2
 """
 
 
+# A part is "important" when its NATION_2 revenue exceeds this multiple
+# of the mean per-part revenue. Relative to the mean, so the selection
+# keeps a similar share of parts at every scale factor (a fixed share
+# of the nation's total selects nothing once the part count grows).
+Q11_MEAN_MULTIPLE = 2
+
+
 def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q11 shape: parts whose revenue from NATION_2's suppliers exceeds
-    a fixed fraction of that nation's total — a grouped sum compared
-    against a global scalar aggregate of the same input (cross-join
-    the 1-row total, Catalyst plans it broadcast-nested-loop). The
-    filtered subtree feeds both aggregates; Spark recomputes or reuses
-    via exchange reuse, no driver round-trip."""
+    twice the mean per-part revenue (``Q11_MEAN_MULTIPLE``) — a grouped
+    sum compared against a global scalar aggregate of that grouped sum
+    (cross-join the 1-row threshold, Catalyst plans it
+    broadcast-nested-loop). The per-part sums feed both sides; no
+    driver round-trip."""
     t = load_tables(spark, sf_dir)
     nation = t["nation"].filter(F.col("n_name") == "NATION_2").select("n_nationkey")
     supp = (
@@ -110,28 +117,34 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
         .select("l_partkey", "l_extendedprice", "l_quantity")
     )
-    value = F.sum(F.col("l_extendedprice") * F.col("l_quantity"))
-    per_part = li.groupBy("l_partkey").agg(F.round(value, 2).alias("part_value"))
-    total = li.agg((value * F.lit(0.001)).alias("threshold"))
+    per_part = li.groupBy("l_partkey").agg(
+        F.sum(F.col("l_extendedprice") * F.col("l_quantity")).alias("value")
+    )
+    threshold = per_part.agg(
+        (F.avg("value") * F.lit(Q11_MEAN_MULTIPLE)).alias("threshold")
+    )
     return (
-        per_part.join(F.broadcast(total), F.col("part_value") > F.col("threshold"))
-        .select("l_partkey", "part_value")
+        per_part.join(F.broadcast(threshold), F.col("value") > F.col("threshold"))
+        .select("l_partkey", F.round("value", 2).alias("part_value"))
     )
 
 
-Q11_ORACLE = """
+Q11_ORACLE = f"""
 WITH li AS (
     SELECT l_partkey, l_extendedprice, l_quantity
     FROM lineitem
     JOIN supplier ON l_suppkey = s_suppkey
     JOIN nation   ON s_nationkey = n_nationkey
     WHERE n_name = 'NATION_2'
+),
+per_part AS (
+    SELECT l_partkey, sum(l_extendedprice * l_quantity) AS value
+    FROM li
+    GROUP BY l_partkey
 )
-SELECT l_partkey, round(sum(l_extendedprice * l_quantity), 2) AS part_value
-FROM li
-GROUP BY l_partkey
-HAVING sum(l_extendedprice * l_quantity) >
-       (SELECT sum(l_extendedprice * l_quantity) * 0.001 FROM li)
+SELECT l_partkey, round(value, 2) AS part_value
+FROM per_part
+WHERE value > (SELECT avg(value) * {Q11_MEAN_MULTIPLE} FROM per_part)
 """
 
 

@@ -13,6 +13,8 @@ pruning and predicate pushdown apply unchanged.
 from __future__ import annotations
 
 import os
+import stat
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -75,17 +77,60 @@ def _ensure_read_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
+# SparkSession -> {path: ((st_ino, st_mtime_ns, st_size), schema)}.
+# Weakly keyed, so the schemas live and die with the session that
+# inferred them; a new or plain session infers again.
+_SCHEMAS: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def _file_stamp(path: str) -> tuple | None:
+    """Identity of a regular file, or None for a directory or a path
+    that is not there (those are never cached)."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return (st.st_ino, st.st_mtime_ns, st.st_size)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, reusing the schema this session
+    already inferred for the same, unchanged file.
+
+    Inference merges the parquet footers in a Spark job; with the
+    schema supplied the relation resolves on the driver alone. Only a
+    single regular file is cached: a directory (a partitioned dataset
+    at scale) can gain files without its own stamp changing, so it is
+    inferred on every read.
+
+    The stamp is taken before the read, so a file rewritten mid-read is
+    stored under its old stamp and inferred again next time. Two runs
+    that miss at once both infer and store the same schema.
+    """
+    stamp = _file_stamp(path)
+    if stamp is None:
+        return spark.read.parquet(path)
+    cache = _SCHEMAS.setdefault(spark, {})
+    hit = cache.get(path)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    cache[path] = (stamp, df.schema)
+    return df
+
+
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     _ensure_read_confs(spark)
-    if name == "events":
-        df = spark.read.parquet(path)
-        if dict(df.dtypes).get("ts") == "bigint":
-            # integer division: ns-epoch values exceed 2^53, so a
-            # float divide rounds some timestamps off by 1µs
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    else:
-        df = spark.read.parquet(path)
+    df = _read_parquet(spark, path)
+    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+        # integer division: ns-epoch values exceed 2^53, so a
+        # float divide rounds some timestamps off by 1µs
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
     # belt-and-braces: if NTZ still slipped through (conf captured by an
     # earlier cached plan, or a future Spark ignores it), cast in-plan.
     for c, t in df.dtypes:
@@ -95,7 +140,15 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 class _LazyTables(dict):
-    """Read each table's footer only when a plan actually touches it."""
+    """Read each table only when a plan actually touches it.
+
+    The first read of a table file in a session infers its schema from
+    the parquet footer (one Spark job); later reads in the same session
+    reuse that schema while the file's (path, inode, mtime_ns, size) is
+    unchanged (``_read_parquet``). Each read still builds a new
+    DataFrame: only the schema is shared, so no caller sees another's
+    DataFrame attributes or a stale file listing.
+    """
 
     def __init__(self, spark: SparkSession, sf_dir: str):
         super().__init__()
@@ -120,6 +173,15 @@ def register_views(spark: SparkSession, sf_dir: str | None = None) -> dict[str, 
     This is the Spark-native analog of the reference's "stage anything
     into SQLite then query it" path (engine/auto_sql_transform.go:21-30)
     — except distributed, lazy, and optimizer-visible.
+
+    The server and scheduler call this before every run. After the
+    first call on a session it launches no Spark job: each table's
+    schema is reused from the session's schema cache (keyed by the
+    file's path, inode, mtime_ns and size; directories are inferred on
+    every read). The views themselves are re-created on every call: a
+    script can rebind a lake view name through a ``QUERY ... FROM
+    BLOCK b AS orders`` autosql body, and the next run must read the
+    lake table again, not that block.
     """
     tables = load_tables(spark, sf_dir)
     for name in TABLE_NAMES:

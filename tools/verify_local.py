@@ -5,7 +5,9 @@ Runs every ``queries()`` entry at sf0.01 on Spark AND its
 names, and an order-insensitive value hash (columns sorted by name,
 rows sorted by their full value tuple, floats rounded to 9 sig
 places before hashing to absorb last-bit noise the real driver may or
-may not tolerate — we aim for exact anyway).
+may not tolerate — we aim for exact anyway). A hash-gated entry that
+returns 0 rows FAILS: an empty result matches an empty oracle
+trivially.
 
 Usage: python tools/verify_local.py [--json out.json] [query ...]
 
@@ -775,6 +777,8 @@ def main(names, json_path=None):
         rec["oracle_rows"] = len(orows)
         scols_l = [c.lower() for c in scols]
         problems = []
+        if not srows:
+            problems.append("zero rows")
         rec["schema_match"] = sorted(scols_l) == sorted(ocols)
         if not rec["schema_match"]:
             problems.append(f"cols spark={scols_l} duck={ocols}")
