@@ -46,6 +46,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from analyst_spark.functions.dedup import persist
+
 
 def bloom_build(
     keys: DataFrame, key_col: str, n_bits: int, n_hashes: int = 2
@@ -201,15 +203,9 @@ def bloom_semi_join(
         rows = built.collect()
         words = spark.createDataFrame(rows, "word_idx long, bits long")
     else:
-        words = built.persist()
-        words.count()
+        words = persist(built, fill=True)
     candidates = bloom_prune(fact, fact_key, words, n_bits, n_hashes)
     dim = dim_keys.select(F.col(dim_key).alias(fact_key)).filter(
         F.col(fact_key).isNotNull()
     )
-    out = candidates.join(dim, on=fact_key, how="left_semi")
-    if n_bits > (1 << 22):
-        # expose the persisted word table so release_cached callers
-        # can unpersist it with the rest of the plan's caches
-        out._asp_cached_deps = [words]  # type: ignore[attr-defined]
-    return out
+    return candidates.join(dim, on=fact_key, how="left_semi")

@@ -8,7 +8,7 @@ fixpoint). Converges in O(diameter) rounds; near-dup clusters are
 shallow (diameter ≲ 5 in practice), so the loop is short. Each round
 is one shuffle on the node id — at 100 TB this is the standard
 large-graph CC pattern (GraphX/GraphFrames use the same skeleton);
-``max_iter`` bounds the worst case and localCheckpoint() every few
+``max_iter`` bounds the worst case and a local checkpoint every few
 rounds truncates the growing lineage.
 """
 
@@ -16,6 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from analyst_spark.functions.dedup import checkpoint, persist
 
 
 def connected_components(
@@ -27,22 +29,23 @@ def connected_components(
 ) -> DataFrame:
     """(node, component) for every node in ``pairs``; component id =
     min node id in the component. Deterministic."""
-    p = pairs.persist()
-    edges = (
+    # read twice by the edge union; a pair list its owner already
+    # persisted or checkpointed is used as it is
+    p = persist(pairs, fill=False)
+    # lineage-truncating: every loop round re-reads the edge list —
+    # without this the (possibly expensive) pair pipeline upstream
+    # re-executes inside each round's actions. Materialized by the
+    # first round's action.
+    edges = checkpoint(
         p.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .union(p.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
         .distinct()
-        # eager, lineage-truncating: every loop round re-reads the
-        # edge list — without this the (possibly expensive) pair
-        # pipeline upstream re-executes inside each round's actions
-        .localCheckpoint()
     )
-    p.unpersist()
-    labels = (
+    labels = persist(
         edges.select(F.col("src").alias("node"))
         .distinct()
-        .withColumn("label", F.col("node"))
-        .persist()
+        .withColumn("label", F.col("node")),
+        fill=False,
     )
     # convergence via the label-sum invariant: min-label propagation
     # only ever DECREASES a label, so the total strictly decreases iff
@@ -80,10 +83,14 @@ def connected_components(
             .groupBy("node")
             .agg(F.min("label").alias("label"))
         )
+        # each round's action below materializes the new labels; a
+        # superseded persisted round is unpersisted right after it,
+        # checkpointed rounds (and the final labels) are freed by
+        # release_cached
         if (i + 1) % checkpoint_every == 0:
-            new_labels = new_labels.localCheckpoint()
+            new_labels = checkpoint(new_labels)
         else:
-            new_labels = new_labels.persist()
+            new_labels = persist(new_labels, fill=False)
         if integral_ids:
             new_sum = new_labels.agg(label_sum.alias("s")).first()["s"]
             labels.unpersist()
@@ -106,19 +113,4 @@ def connected_components(
             labels = new_labels
             if changed == 0:
                 break
-    edges.unpersist()
-    out = labels.select(
-        F.col("node"), F.col("label").alias("component")
-    )
-    # The final labels frame stays persisted (each loop round
-    # unpersists only the PREVIOUS one) and the caller's actions read
-    # through it — expose it, plus any caches the pair pipeline
-    # registered upstream, so release_cached() can reclaim them
-    # (r12 review: every components consumer was leaking one cached
-    # label table per invocation). NOTE: _asp_cached_deps does not
-    # survive .select() — consumers must collect these from THIS
-    # frame before projecting.
-    out._asp_cached_deps = list(  # type: ignore[attr-defined]
-        getattr(pairs, "_asp_cached_deps", ())
-    ) + [labels]
-    return out
+    return labels.select(F.col("node"), F.col("label").alias("component"))

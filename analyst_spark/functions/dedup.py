@@ -25,45 +25,101 @@ materialization) for the production path.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+import threading
+import weakref
+
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from analyst_spark.functions.text import doc_fingerprint, normalize_text, tokens
 from analyst_spark.tables import spread
 
 
-def _with_cached_deps(out: DataFrame, *deps: DataFrame) -> DataFrame:
-    """Record persisted intermediates on the result so long-lived
-    sessions can release them via :func:`release_cached` once the
-    consuming action has run (one-shot jobs can ignore this — the
-    cache dies with the session)."""
-    out._asp_cached_deps = list(deps)  # type: ignore[attr-defined]
-    return out
+# SparkSession -> {id(frame): (frame, checkpoint RDD or None)}: every
+# intermediate a plan materialized for its session, until release.
+# Weakly keyed like ``tables._SCHEMAS``; the frames are held strongly
+# so their ids stay unique while recorded.
+_LEDGER: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
+    weakref.WeakKeyDictionary()
+)
+_LEDGER_LOCK = threading.Lock()
+
+
+def _record(frame: DataFrame, rdd=None) -> bool:
+    """Add ``frame`` to its session's ledger; False if already there."""
+    with _LEDGER_LOCK:
+        recorded = _LEDGER.setdefault(frame.sparkSession, {})
+        if id(frame) in recorded:
+            return False
+        recorded[id(frame)] = (frame, rdd)
+        return True
+
+
+def persist(
+    frame: DataFrame, fill: bool, level: StorageLevel | None = None
+) -> DataFrame:
+    """Persist ``frame`` for the rest of the query and record it for
+    :func:`release_cached`; returns ``frame``.
+
+    ``fill`` counts the frame once, NOW, so Catalyst plans downstream
+    joins on REAL statistics. An unmaterialized InMemoryRelation
+    inherits its child's size estimate — explode does not grow
+    sizeInBytes — so a corpus whose pruned scan fits the broadcast
+    threshold would get its multi-GB postings statically planned as a
+    broadcast (driver OOM on a 600M-shingle probe corpus).
+
+    A frame that is already recorded (persisted or checkpointed by
+    its owner) is returned untouched: never persisted on top, never
+    filled again — the owner already chose how and when it
+    materializes.
+    """
+    if not _record(frame):
+        return frame
+    if level is None:
+        frame.persist()
+    else:
+        frame.persist(level)
+    if fill:
+        frame.count()
+    return frame
+
+
+def checkpoint(frame: DataFrame) -> DataFrame:
+    """A lazy ``localCheckpoint`` of ``frame`` (materialized by the
+    first action that reads it, lineage cut from then on), recorded
+    for :func:`release_cached`.
+
+    The checkpoint's RDD joins the session's persistent RDDs at call
+    time, and ``DataFrame.unpersist`` on the checkpointed frame does
+    nothing; only unpersisting that RDD frees its blocks, which is
+    what release does. A checkpoint read after its release fails
+    (its blocks have no lineage to recompute from)."""
+    ckpt = frame.localCheckpoint(eager=False)
+    _record(ckpt, ckpt._jdf.queryExecution().analyzed().rdd())
+    return ckpt
 
 
 def release_cached(df: DataFrame) -> None:
-    """Unpersist intermediates persisted while building ``df``."""
-    for dep in getattr(df, "_asp_cached_deps", ()):
-        dep.unpersist()
+    """Release every intermediate that :func:`persist` and
+    :func:`checkpoint` recorded for ``df``'s SparkSession.
 
-
-def _fill_cache(frame: DataFrame, eager_stats: bool) -> DataFrame:
-    """Materialize a persisted frame NOW (one count job) so Catalyst
-    plans downstream joins on REAL statistics. An UNmaterialized
-    InMemoryRelation inherits its child's size estimate — explode
-    does not grow sizeInBytes — so a corpus whose pruned scan fits
-    the broadcast threshold gets its multi-GB postings statically
-    planned as a broadcast (driver OOM on a 600M-shingle probe
-    corpus, fixed in commit 1834765).
-
-    ``eager_stats=False`` (r9 advice) skips the job so SPECULATIVE
-    plan construction stays fully lazy; the caller accepts the
-    static mis-broadcast hazard and must either materialize the
-    frame before the first action or disable auto-broadcast for the
-    session. The frame is still persisted either way."""
-    if eager_stats:
-        frame.count()
-    return frame
+    Call it after the consuming action(s) of everything built so far:
+    it covers the whole session, not only ``df``'s own inputs (a
+    projection such as ``df.select(...)`` releases the same set). A
+    persisted frame used after release recomputes; a checkpointed
+    one fails. That is safe for the long-lived callers (bench, the
+    catalog sweep, the tests) because each builds, consumes and
+    releases one entry at a time; a multi-day caller releases after
+    the day's state is written.
+    """
+    with _LEDGER_LOCK:
+        recorded = _LEDGER.pop(df.sparkSession, {})
+    for frame, rdd in recorded.values():
+        if rdd is None:
+            frame.unpersist()
+        else:
+            rdd.unpersist(False)
 
 
 def exact_dedup(
@@ -373,10 +429,9 @@ def incremental_neardup_pairs(
     """
     k = bands * rows_per_band
     if batch_sigs is None:
-        batch_sigs = _fill_cache(
-            minhash_signatures(batch, text_col, id_col, n, num_hashes=k)
-            .persist(),
-            True,
+        batch_sigs = persist(
+            minhash_signatures(batch, text_col, id_col, n, num_hashes=k),
+            fill=True,
         )
     bb = band_buckets(batch_sigs, id_col, bands, rows_per_band)
     hb = band_buckets(history_index, id_col, bands, rows_per_band)
@@ -400,13 +455,12 @@ def incremental_neardup_pairs(
     n_match = sum(
         (F.col(f"__b{i}") == F.col(f"__h{i}")).cast("int") for i in range(k)
     )
-    return _with_cached_deps(
+    return (
         cand.join(sb, "id_batch")
         .join(sh, "id_hist")
         .withColumn("n_match", n_match.cast("long"))
         .filter(F.col("n_match") >= min_match)
-        .select("id_batch", "id_hist", "n_match"),
-        batch_sigs,
+        .select("id_batch", "id_hist", "n_match")
     )
 
 
@@ -470,7 +524,6 @@ def incremental_neardup_ingest(
     rows_per_band: int = 2,
     min_match: int = 6,
     include_intra_batch: bool = True,
-    presigned: bool = False,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """ONE DAY of the incremental near-dup LIFECYCLE (VERDICT r10
     #2): probe the new batch, append its signatures to the index,
@@ -525,21 +578,9 @@ def incremental_neardup_ingest(
     from analyst_spark.functions.incremental import lifecycle_day
 
     k = bands * rows_per_band
-    # ``presigned=True`` means ``batch`` is ALREADY a
-    # :func:`neardup_signature_index` frame (id, mh0..mh{k-1}) — the
-    # multiday entry signs its whole corpus in one Arrow pass and
-    # slices per day (r15, the embedding sibling's r13 shape), so
-    # re-signing here would be a second pass over the same text. A
-    # presigned batch is a filter over an already-cached signature
-    # table — its cache fills on first use, no eager count needed.
-    batch_sigs = (
-        batch.persist()
-        if presigned
-        else _fill_cache(
-            minhash_signatures(batch, text_col, id_col, n, num_hashes=k)
-            .persist(),
-            True,
-        )
+    batch_sigs = persist(
+        minhash_signatures(batch, text_col, id_col, n, num_hashes=k),
+        fill=True,
     )
     # The family-independent lifecycle (self-pair suppression,
     # unordered-pair-key ledger anti-join — the r11-review replay
@@ -631,7 +672,6 @@ def incremental_neardup_ingest(
         reported=reported,
         id_col=id_col,
     )
-    pairs = _with_cached_deps(pairs, batch_sigs)
     return pairs, new_index, new_reported
 
 
@@ -670,7 +710,9 @@ def minhash_pairs(
     # The self-join below consumes `buckets` twice; persist so the
     # md5-heavy signature pipeline is computed once (at cluster scale:
     # checkpoint/exchange reuse — same idea).
-    buckets = band_buckets(sigs, id_col, bands, rows_per_band).persist()
+    buckets = persist(
+        band_buckets(sigs, id_col, bands, rows_per_band), fill=False
+    )
     dropped = None
     join_src = buckets
     if max_bucket_size is not None:
@@ -693,7 +735,7 @@ def minhash_pairs(
         join_src = buckets.join(keep, ["band", "bucket"])
     a = join_src.alias("a")
     b_ = join_src.alias("b")
-    out = _with_cached_deps(
+    out = (
         a.join(
             b_,
             (F.col("a.band") == F.col("b.band"))
@@ -703,8 +745,7 @@ def minhash_pairs(
         .groupBy(
             F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
         )
-        .agg(F.count(F.lit(1)).cast("long").alias("n_bands")),
-        buckets,
+        .agg(F.count(F.lit(1)).cast("long").alias("n_bands"))
     )
     if dropped is not None:
         out._asp_dropped_buckets = dropped  # type: ignore[attr-defined]
@@ -941,7 +982,6 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.5,
-    eager_stats: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for all pairs sharing >= 1
     shingle. intersection via self-join-count, union = |A|+|B|-∩.
@@ -950,13 +990,10 @@ def ngram_jaccard_pairs(
     list), never on the raw corpus; the shared-shingle join here is
     the exact-verify step and is already linear in total postings.
 
-    ``eager_stats`` (default on) fills the postings cache at
-    construction time so the verify join plans on real sizes; pass
-    False for speculative lazy plan construction (see _fill_cache).
+    The postings cache is filled at construction time so the verify
+    join plans on real sizes (see :func:`persist`).
     """
-    sh = _fill_cache(
-        shingles_exploded(df, text_col, id_col, n).persist(), eager_stats
-    )
+    sh = persist(shingles_exploded(df, text_col, id_col, n), fill=True)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
@@ -966,15 +1003,14 @@ def ngram_jaccard_pairs(
     )
     sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("na"))
     sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("nb"))
-    return _with_cached_deps(
+    return (
         inter.join(sa, "id_a").join(sb, "id_b")
         .withColumn(
             "jaccard",
             F.round(F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6),
         )
         .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard"),
-        sh,
+        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -985,7 +1021,6 @@ def jaccard_prefix_pairs(
     n: int = 3,
     threshold_num: int = 3,
     threshold_den: int = 5,
-    eager_stats: bool = True,
 ) -> DataFrame:
     """EXACT set-similarity self-join via prefix filtering (the
     AllPairs/PPJoin family — Bayardo et al., WWW'07; Xiao et al.,
@@ -1040,13 +1075,15 @@ def jaccard_prefix_pairs(
       DISTINCT needs any one row per pair, so recall stays exactly 1.
     """
     num, den = threshold_num, threshold_den
-    sh = _fill_cache(
-        shingles_exploded(df, text_col, id_col, n).persist(), eager_stats
-    )
+    sh = persist(shingles_exploded(df, text_col, id_col, n), fill=True)
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     wdoc = Window.partitionBy(id_col).orderBy("__df", "shingle")
-    prefix = _fill_cache(
+    # persist so the SELF-join below plans on real prefix sizes
+    # (r9 advice: the unpersisted frame re-derived the df-join +
+    # window pipeline once per join side AND planned on derived
+    # estimates; containment_pairs' ranked frame set the pattern)
+    prefix = persist(
         sh.join(dfreq, "shingle")
         .join(sizes, id_col)
         .withColumn("__pos", F.row_number().over(wdoc))
@@ -1056,13 +1093,8 @@ def jaccard_prefix_pairs(
             - F.expr(f"({num}*n_sh + {den - 1}) DIV {den}")
             + F.lit(1)
         )
-        .select(id_col, "shingle", "n_sh", "__pos")
-        # persist so the SELF-join below plans on real prefix sizes
-        # (r9 advice: the unpersisted frame re-derived the df-join +
-        # window pipeline once per join side AND planned on derived
-        # estimates; containment_pairs' ranked frame set the pattern)
-        .persist(),
-        eager_stats,
+        .select(id_col, "shingle", "n_sh", "__pos"),
+        fill=True,
     )
     a, b = prefix.alias("a"), prefix.alias("b")
     cand = (
@@ -1103,7 +1135,7 @@ def jaccard_prefix_pairs(
     )
     sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("na"))
     sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("nb"))
-    return _with_cached_deps(
+    return (
         inter.join(sa, "id_a")
         .join(sb, "id_b")
         .filter(
@@ -1116,9 +1148,7 @@ def jaccard_prefix_pairs(
                 6,
             ),
         )
-        .select("id_a", "id_b", "jaccard"),
-        sh,
-        prefix,
+        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -1129,7 +1159,6 @@ def containment_pairs(
     n: int = 3,
     threshold_num: int = 4,
     threshold_den: int = 5,
-    eager_stats: bool = True,
     max_posting_df: int | None = None,
 ) -> DataFrame:
     """EXACT asymmetric near-dup join: pairs where document A's
@@ -1189,25 +1218,21 @@ def containment_pairs(
     Default None keeps the exact completeness proof and every hash
     gate untouched.
 
-    ``eager_stats`` (default on) fills the postings/ranked caches at
-    construction time so joins plan on real sizes; pass False for
-    speculative lazy plan construction (see _fill_cache).
+    The postings and ranked caches are filled at construction time so
+    joins plan on real sizes (see :func:`persist`).
     """
     num, den = threshold_num, threshold_den
-    sh = _fill_cache(
-        shingles_exploded(df, text_col, id_col, n).persist(), eager_stats
-    )
+    sh = persist(shingles_exploded(df, text_col, id_col, n), fill=True)
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     wdoc = Window.partitionBy(id_col).orderBy("__df", "shingle")
-    ranked = _fill_cache(
+    ranked = persist(
         sh.join(dfreq, "shingle")
         .join(sizes, id_col)
         .withColumn("__pos", F.row_number().over(wdoc))
         .withColumn("__sdf", F.col("__df"))
-        .select(id_col, "shingle", "n_sh", "__pos", "__sdf")
-        .persist(),
-        eager_stats,
+        .select(id_col, "shingle", "n_sh", "__pos", "__sdf"),
+        fill=True,
     )
     dropped = None
     prefix = ranked.filter(
@@ -1271,16 +1296,14 @@ def containment_pairs(
         .agg(F.count(F.lit(1)).alias("inter"))
     )
     na = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("na"))
-    out = _with_cached_deps(
+    out = (
         inter.join(na, "id_a")
         .filter(den * F.col("inter") >= num * F.col("na"))
         .select(
             F.col("id_a").alias("id_contained"),
             F.col("id_b").alias("id_container"),
             F.round(F.col("inter") / F.col("na"), 6).alias("containment"),
-        ),
-        sh,
-        ranked,
+        )
     )
     if dropped is not None:
         out._asp_dropped_postings = dropped  # type: ignore[attr-defined]
@@ -1351,12 +1374,7 @@ def lsh_verified_pairs(
     persisted shingle frame so the verify-join planner sees REAL
     postings statistics instead of the explode-blind scan estimate
     (a statically mis-broadcast postings table OOMed the driver on a
-    600M-shingle probe corpus). Callers that must stay fully lazy
-    should compose the underlying functions directly with
-    ``eager_stats=False`` (r9 advice: the pair builders are
-    themselves eager by default now; the parameter restores a lazy
-    composition path — see :func:`_fill_cache` for the hazard the
-    caller then owns).
+    600M-shingle probe corpus; see :func:`persist`).
 
     ``max_bucket_size`` (opt-in, VERDICT r7 #4) bounds the remaining
     storm mode the exact-collapse cannot absorb: NEAR-clone corpora,
@@ -1397,14 +1415,13 @@ def lsh_verified_pairs(
             F.md5(F.col(text_col)).alias("__fp"),
             F.col(id_col).alias("__id"),
         )
-        groups = (
-            rows.groupBy("__fp")
-            .agg(
+        groups = persist(
+            rows.groupBy("__fp").agg(
                 F.min_by("__row", "__id").alias("__row"),
                 F.collect_list("__id").alias("members"),
                 F.count(F.lit(1)).alias("gsz"),
-            )
-            .persist()
+            ),
+            fill=False,
         )
         reps_df = groups.select("__row.*")
         rep_pairs = lsh_verified_pairs(
@@ -1412,7 +1429,6 @@ def lsh_verified_pairs(
             threshold, collapse_exact=False,
             max_bucket_size=max_bucket_size,
         )
-        rep_deps = getattr(rep_pairs, "_asp_cached_deps", ())
         g2 = groups.select(
             F.col(f"__row.{id_col}").alias("rep"), "members", "gsz"
         )
@@ -1450,24 +1466,17 @@ def lsh_verified_pairs(
                 F.lit(1.0).alias("jaccard"),
             )
         )
-        out = _with_cached_deps(
-            cross.unionByName(intra), groups, *rep_deps
-        )
+        out = cross.unionByName(intra)
         if hasattr(rep_pairs, "_asp_dropped_buckets"):
             out._asp_dropped_buckets = (  # type: ignore[attr-defined]
                 rep_pairs._asp_dropped_buckets
             )
         return out
-    sh = _fill_cache(
-        shingles_exploded(df, text_col, id_col, n).persist(), True
-    )
+    sh = persist(shingles_exploded(df, text_col, id_col, n), fill=True)
     cand_full = minhash_pairs(
         df, text_col, id_col, n, bands, rows_per_band, shingles=sh,
         max_bucket_size=max_bucket_size,
     )
-    # capture the buckets dep BEFORE projecting (select drops the
-    # _asp_cached_deps attribute)
-    cand_deps = getattr(cand_full, "_asp_cached_deps", ())
     cand = cand_full.select("id_a", "id_b")
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     left = cand.join(
@@ -1483,7 +1492,7 @@ def lsh_verified_pairs(
     )
     sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("na"))
     sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("nb"))
-    out = _with_cached_deps(
+    out = (
         inter.join(sa, "id_a").join(sb, "id_b")
         .withColumn(
             "jaccard",
@@ -1493,9 +1502,7 @@ def lsh_verified_pairs(
             ),
         )
         .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard"),
-        sh,
-        *cand_deps,
+        .select("id_a", "id_b", "jaccard")
     )
     if hasattr(cand_full, "_asp_dropped_buckets"):
         out._asp_dropped_buckets = (  # type: ignore[attr-defined]

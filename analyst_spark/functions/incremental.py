@@ -43,6 +43,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from analyst_spark.functions.dedup import checkpoint
+
 CrossFn = Callable[[DataFrame, DataFrame], DataFrame]
 IntraFn = Callable[[DataFrame], DataFrame]
 
@@ -99,8 +101,10 @@ def lifecycle_day(
         # every reference scans the same RDD. Storage-backed callers
         # (load_state) already arrive lineage-free and at 100 TB the
         # ledger is a stored table — this only affects bounded
-        # in-query folds, whose ledgers are pair-list-sized.
-        reported = reported.localCheckpoint(eager=False)
+        # in-query folds, whose ledgers are pair-list-sized. The
+        # checkpoint lives until release_cached: release after the
+        # day's state is written, not right after ``pairs``.
+        reported = checkpoint(reported)
     if reported is not None:
         pairs = (
             pairs.withColumn("pair_lo", F.least("id_batch", "id_hist"))

@@ -28,16 +28,8 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# ``_asp_skip_stats_count`` protocol (ADVICE r14 rename of
-# ``_asp_stats_ready``): a Python-side attribute a CALLER sets on a
-# persisted DataFrame to tell the banded-join builders below "do not
-# run your eager stats-priming count() on this frame". It means
-# exactly "skip the count" — the caller either already counted the
-# frame (real InMemoryRelation stats exist) or has decided AQE's
-# runtime shuffle stats are sufficient (KB-sized checkpointed state).
-# It does not survive DataFrame transformations, so it must be set on
-# the exact object passed in; consequences of a wrong setting are
-# plan-quality only (a mis-sized broadcast decision), never results.
+from analyst_spark.functions.dedup import persist
+
 FAKE_MAGIC = b"FAKEIMG1"
 
 FEATURE_SCHEMA = (
@@ -395,8 +387,8 @@ def perceptual_dedup_pairs(
     (Arrow-batched); candidates are bucket-join-bounded (a bucket =
     images sharing one band value); verify cost is candidates × 4
     integer ops. The signature frame is persisted and materialized
-    before the self-join plans (the _fill_cache discipline from
-    functions/dedup.py — same static mis-broadcast hazard class).
+    before the self-join plans (the ``persist(fill=True)`` discipline
+    from functions/dedup.py — same static mis-broadcast hazard class).
 
     Output: (id_a, id_b, hamming), id_a < id_b,
     hamming <= max_distance.
@@ -500,7 +492,8 @@ def banded_hamming_pairs(
     least one band is identical and the (band, value) equi-join finds
     it; verification is 4 xor+bit_count JVM ops per candidate. The
     signature frame is persisted and materialized before the
-    self-join plans (the _fill_cache discipline).
+    self-join plans (the ``persist(fill=True)`` discipline; a frame
+    its owner already persisted or checkpointed is used as it is).
 
     The engine is band-WIDTH agnostic (r12, VERDICT r11 #1): the
     recall proof depends only on the band COUNT (4), while the
@@ -550,10 +543,7 @@ def banded_hamming_pairs(
             "< 4 (at >= 4 all bands can differ and the banded join "
             "silently loses pairs)"
         )
-    sigs = sigs.persist()
-    if not getattr(sigs, "_asp_skip_stats_count", False):
-        sigs.count()  # real stats before the self-join plans
-        sigs._asp_skip_stats_count = True  # type: ignore[attr-defined]
+    sigs = persist(sigs, fill=True)  # real stats before the self-join
     gcols = [group_col] if group_col else []
     if max_bucket_size is None:
         # Class-level candidates (r15, guide §8 "decide with small
@@ -629,7 +619,6 @@ def banded_hamming_pairs(
                 "hamming",
             )
         )
-        out._asp_cached_deps = [sigs]  # type: ignore[attr-defined]
         return out
     bands = signature_bands(sigs, "doc_id", tuple(gcols))
     bucket_key = gcols + ["band", "val"]
@@ -687,7 +676,6 @@ def banded_hamming_pairs(
         .filter(F.col("hamming") <= max_distance)
         .select(*gcols, "id_a", "id_b", "hamming")
     )
-    out._asp_cached_deps = [sigs]  # type: ignore[attr-defined]
     if dropped is not None:
         out._asp_dropped_buckets = dropped  # type: ignore[attr-defined]
     return out
@@ -1103,9 +1091,6 @@ def video_perceptual_pairs(
         .filter(2 * F.col("n_frames_matched") > F.col("n_shared_frames"))
         .select("id_a", "id_b", "n_frames_matched", "n_shared_frames")
     )
-    out._asp_cached_deps = list(  # type: ignore[attr-defined]
-        getattr(frame_pairs, "_asp_cached_deps", [])
-    )
     if hasattr(frame_pairs, "_asp_dropped_buckets"):
         out._asp_dropped_buckets = (  # type: ignore[attr-defined]
             frame_pairs._asp_dropped_buckets
@@ -1144,19 +1129,13 @@ def incremental_hamming_pairs(
             "recall-1 range of the 4-band split"
         )
     # idempotent stats fill (r14): a frame the caller (or an earlier
-    # probe in the same lifecycle) already counted carries
-    # _asp_skip_stats_count — re-counting it is a pure scheduler-overhead
-    # job at gate scale (the r14 job decomposition measured the
-    # multiday entries at 66-91 jobs each, mostly re-materializations
-    # of already-cached state)
-    index_sigs = index_sigs.persist()
-    if not getattr(index_sigs, "_asp_skip_stats_count", False):
-        index_sigs.count()
-        index_sigs._asp_skip_stats_count = True  # type: ignore[attr-defined]
-    batch_sigs = batch_sigs.persist()
-    if not getattr(batch_sigs, "_asp_skip_stats_count", False):
-        batch_sigs.count()
-        batch_sigs._asp_skip_stats_count = True  # type: ignore[attr-defined]
+    # probe in the same lifecycle) already recorded is not counted
+    # again — re-counting it is a pure scheduler-overhead job at gate
+    # scale (the r14 job decomposition measured the multiday entries
+    # at 66-91 jobs each, mostly re-materializations of already-cached
+    # state)
+    index_sigs = persist(index_sigs, fill=True)
+    batch_sigs = persist(batch_sigs, fill=True)
     if max_bucket_size is None:
         # Class-level probe (r15, guide §8 — same device as the
         # banded_hamming_pairs rewrite above): band-join DISTINCT
@@ -1197,7 +1176,6 @@ def incremental_hamming_pairs(
             .join(sh, [f"__b{k}" for k in range(4)])
             .select("id_batch", "id_hist", "hamming")
         )
-        out._asp_cached_deps = [index_sigs, batch_sigs]  # type: ignore[attr-defined]
         return out
     hb = signature_bands(index_sigs, "id_hist")
     bb = signature_bands(batch_sigs, "id_batch")
@@ -1243,7 +1221,6 @@ def incremental_hamming_pairs(
         .filter(F.col("hamming") <= max_distance)
         .select("id_batch", "id_hist", "hamming")
     )
-    out._asp_cached_deps = [index_sigs, batch_sigs]  # type: ignore[attr-defined]
     if dropped is not None:
         out._asp_dropped_buckets = dropped  # type: ignore[attr-defined]
     return out
@@ -1281,24 +1258,20 @@ def incremental_hamming_ingest(
     """
     from analyst_spark.functions.incremental import lifecycle_day
 
-    batch_sigs = batch_sigs.persist()
-    if eager_batch_count:
-        batch_sigs.count()  # shared by cross probe, intra join, append
-        # mark the stats fill so the probe engines don't re-count the
-        # same frame (r14: the cross probe re-ran a dedicated count
-        # job per day because the flag was missing here)
-        batch_sigs._asp_skip_stats_count = True  # type: ignore[attr-defined]
-    # (callers whose batch derives from an already-cached signature
-    # table pass False: the cache fills on first use, and at gate
-    # scale every eager action is a fixed-latency job — r13 trim)
-    deps: list[DataFrame] = [batch_sigs]
+    # shared by cross probe, intra join, append; recorded, so the
+    # probe engines don't re-count the same frame (r14: the cross
+    # probe re-ran a dedicated count job per day). Callers whose batch
+    # derives from an already-cached signature table pass
+    # ``eager_batch_count=False``: the cache fills on first use, and
+    # at gate scale every eager action is a fixed-latency job (r13
+    # trim).
+    batch_sigs = persist(batch_sigs, fill=eager_batch_count)
     dropped: list[DataFrame] = []
 
     def cross(idx: DataFrame, bs: DataFrame) -> DataFrame:
         out = incremental_hamming_pairs(
             idx, bs, max_distance, max_bucket_size
         )
-        deps.extend(getattr(out, "_asp_cached_deps", []))
         if hasattr(out, "_asp_dropped_buckets"):
             dropped.append(out._asp_dropped_buckets)
         return out
@@ -1307,7 +1280,6 @@ def incremental_hamming_ingest(
         out = banded_hamming_pairs(
             bs, max_distance, max_bucket_size=max_bucket_size
         )
-        deps.extend(getattr(out, "_asp_cached_deps", []))
         if hasattr(out, "_asp_dropped_buckets"):
             dropped.append(out._asp_dropped_buckets)
         return out.select(
@@ -1329,11 +1301,7 @@ def incremental_hamming_ingest(
         # the index (replay). Halves the per-day join pipelines the
         # split form ran (each was its own AQE job chain at gate
         # scale).
-        idx = idx.persist()
-        if not getattr(idx, "_asp_skip_stats_count", False):
-            idx.count()
-            idx._asp_skip_stats_count = True  # type: ignore[attr-defined]
-        deps.append(idx)
+        idx = persist(idx, fill=True)
         # Class-level candidates (r15, guide §8 — the same
         # distinct-signature device as banded_hamming_pairs): the
         # (band, val) equi-join and the hamming verify run over
@@ -1399,7 +1367,6 @@ def incremental_hamming_ingest(
         reported=reported,
         id_col="doc_id",
     )
-    pairs._asp_cached_deps = deps  # type: ignore[attr-defined]
     if dropped:
         d = dropped[0]
         for extra in dropped[1:]:

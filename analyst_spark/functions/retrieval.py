@@ -55,7 +55,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from analyst_spark.functions.dedup import _with_cached_deps
+from analyst_spark.functions.dedup import persist
 
 
 def bm25_topk(
@@ -73,14 +73,15 @@ def bm25_topk(
     """
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
-    toks = (
+    toks = persist(
         docs.select(
             id_col, F.explode(F.split(F.col(text_col), " ")).alias("w")
-        )
-        .filter(F.col("w") != "")
-        .persist()
+        ).filter(F.col("w") != ""),
+        fill=False,
     )
-    lens = toks.groupBy(id_col).agg(F.count(F.lit(1)).alias("len")).persist()
+    lens = persist(
+        toks.groupBy(id_col).agg(F.count(F.lit(1)).alias("len")), fill=False
+    )
     corpus = lens.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("len").cast("long").alias("t_tokens"),
@@ -126,7 +127,7 @@ def bm25_topk(
         .orderBy(F.col("score_micro").desc(), F.col(id_col).asc())
         .limit(k)
     )
-    return _with_cached_deps(out, toks, lens)
+    return out
 
 
 def bm25_topk_multi(
@@ -173,26 +174,27 @@ def bm25_topk_multi(
     """
     from pyspark.sql import Window
 
-    q = (
+    q = persist(
         queries.select(
             F.col(query_id_col).alias("query_id"),
             F.col(term_col).alias("w"),
-        )
-        .distinct()
-        .persist()
+        ).distinct(),
+        fill=False,
     )
     qterms = q.select("w").distinct()
-    toks = (
+    toks = persist(
         docs.select(
             id_col, F.explode(F.split(F.col(text_col), " ")).alias("w")
         )
         .filter(F.col("w") != "")
         # doc-partitioned ONCE: every downstream doc-keyed aggregate
         # and the postings-lens join inherit this partitioning
-        .repartition(F.col(id_col))
-        .persist()
+        .repartition(F.col(id_col)),
+        fill=False,
     )
-    lens = toks.groupBy(id_col).agg(F.count(F.lit(1)).alias("len")).persist()
+    lens = persist(
+        toks.groupBy(id_col).agg(F.count(F.lit(1)).alias("len")), fill=False
+    )
     corpus = lens.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("len").cast("long").alias("t_tokens"),
@@ -204,11 +206,11 @@ def bm25_topk_multi(
     # audit found the duplicated chain; exchange reuse across the
     # two consumers is an AQE runtime maybe, the persist is a
     # certainty)
-    posting = (
+    posting = persist(
         toks.join(F.broadcast(qterms), "w", "leftsemi")
         .groupBy(id_col, "w")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-        .persist()
+        .agg(F.count(F.lit(1)).cast("long").alias("tf")),
+        fill=False,
     )
     dfs = posting.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("df"))
     scored = (
@@ -258,7 +260,7 @@ def bm25_topk_multi(
             F.col("rank").cast("int").alias("rank"),
         )
     )
-    return _with_cached_deps(out, q, toks, lens, posting)
+    return out
 
 
 def rrf_fuse_multi(

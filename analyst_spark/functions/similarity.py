@@ -22,6 +22,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from analyst_spark.functions.dedup import persist
 from analyst_spark.tables import spread
 
 
@@ -416,8 +417,6 @@ def lsh_neardup_pairs(
     """
     from pyspark import StorageLevel
 
-    from analyst_spark.functions.dedup import _with_cached_deps
-
     df = drop_null_vectors(df, vec_col)
     v = spread(df, id_col).select(F.col(id_col), F.col(vec_col).alias("__v"))
     sig = band_signature_udf(bands, bits_per_band, dim)
@@ -432,8 +431,10 @@ def lsh_neardup_pairs(
     # bucket) table (measured at sf0.1: 1.16s vs 1.56s cold).
     # MEMORY_AND_DISK so a 100 TB corpus spills instead of recomputing
     # signatures.
-    sigs = v.select(F.col(id_col), sig(F.col("__v")).alias("__sig")).persist(
-        StorageLevel.MEMORY_AND_DISK
+    sigs = persist(
+        v.select(F.col(id_col), sig(F.col("__v")).alias("__sig")),
+        fill=False,
+        level=StorageLevel.MEMORY_AND_DISK,
     )
     buckets = sigs.select(
         F.col(id_col), F.posexplode("__sig").alias("band", "bucket")
@@ -463,12 +464,11 @@ def lsh_neardup_pairs(
         _dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb")),
         round_digits,
     )
-    return _with_cached_deps(
+    return (
         cand.join(ea, "id_a")
         .join(eb, "id_b")
         .select("id_a", "id_b", sim.alias("cosine_sim"))
-        .filter(F.col("cosine_sim") >= threshold),
-        buckets,
+        .filter(F.col("cosine_sim") >= threshold)
     )
 
 
@@ -599,7 +599,7 @@ def semantic_dedup(
     c = spread(corpus, id_col).select(
         F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")
     )
-    assigned = (
+    assigned = persist(  # self-joined below: halve the assignment compute
         c.crossJoin(F.broadcast(cents))
         .withColumn("__csim", F.round(cosine(F.col("__v"), F.col("__cent")), 6))
         .withColumn(
@@ -611,10 +611,9 @@ def semantic_dedup(
             ),
         )
         .filter(F.col("__crn") == 1)
-        .select("__id", "centroid_id", "__v")
-        .persist()  # self-joined below: halve the assignment compute
+        .select("__id", "centroid_id", "__v"),
+        fill=True,
     )
-    assigned.count()
     return _dup_within_clusters(assigned, threshold, id_col)
 
 
@@ -639,9 +638,7 @@ def _dup_within_clusters(
         .groupBy(F.col("b.__id").alias("__id"))
         .agg(F.min(F.col("a.__id")).alias("dup_of"))
     )
-    from analyst_spark.functions.dedup import _with_cached_deps
-
-    return _with_cached_deps(
+    return (
         assigned.select("__id", "centroid_id")
         .join(dup, "__id", "left")
         .select(
@@ -649,8 +646,7 @@ def _dup_within_clusters(
             F.col("centroid_id").cast("long").alias("cluster_id"),
             F.col("dup_of").cast("long").alias("dup_of"),
             F.col("dup_of").isNotNull().alias("is_dup"),
-        ),
-        assigned,
+        )
     )
 
 
@@ -710,14 +706,12 @@ def semantic_dedup_trained(
         ).alias(vec_col),
     )
     _, asg = kmeans_train(normed, k=k, iters=iters, id_col=id_col, vec_col=vec_col)
-    assigned = (
+    assigned = persist(  # self-joined in the pair stage
         v.join(
             asg.select(F.col(id_col).alias("__id"), "cluster"), "__id"
-        )
-        .select("__id", F.col("cluster").alias("centroid_id"), "__v")
-        .persist()  # self-joined in the pair stage
+        ).select("__id", F.col("cluster").alias("centroid_id"), "__v"),
+        fill=True,
     )
-    assigned.count()
     return _dup_within_clusters(assigned, threshold, id_col)
 
 
@@ -1027,8 +1021,6 @@ def incremental_embedding_pairs(
     """
     from pyspark import StorageLevel
 
-    from analyst_spark.functions.dedup import _with_cached_deps
-
     sig = band_signature_udf(bands, bits_per_band, dim)
 
     def prep(df, alias):
@@ -1036,11 +1028,13 @@ def incremental_embedding_pairs(
         v = spread(d, id_col).select(
             F.col(id_col), F.col(vec_col).alias("__v")
         )
-        sigs = v.select(
-            F.col(id_col), sig(F.col("__v")).alias("__sig")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        sigs.count()  # real stats; at scale the history side is a
+        # filled for real stats; at scale the history side is a
         # stored signature table, not a recomputation
+        sigs = persist(
+            v.select(F.col(id_col), sig(F.col("__v")).alias("__sig")),
+            fill=True,
+            level=StorageLevel.MEMORY_AND_DISK,
+        )
         buckets = sigs.select(
             F.col(id_col).alias(alias),
             F.posexplode("__sig").alias("band", "bucket"),
@@ -1068,13 +1062,11 @@ def incremental_embedding_pairs(
         _dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb")),
         round_digits,
     )
-    return _with_cached_deps(
+    return (
         cand.join(ea, "id_batch")
         .join(eb, "id_hist")
         .select("id_batch", "id_hist", sim.alias("cosine_sim"))
-        .filter(F.col("cosine_sim") >= threshold),
-        hsigs,
-        bsigs,
+        .filter(F.col("cosine_sim") >= threshold)
     )
 
 
@@ -1188,18 +1180,19 @@ def incremental_embedding_ingest(
     """
     from pyspark import StorageLevel
 
-    from analyst_spark.functions.dedup import _with_cached_deps
     from analyst_spark.functions.incremental import lifecycle_day
 
-    bidx = (
+    # a fresh batch is signed in one Arrow pass shared by every
+    # consumer and filled now; a presigned batch is a filter over an
+    # already-cached signature table — its cache fills on first use,
+    # no eager job needed
+    bidx = persist(
         batch
         if presigned
-        else embedding_index(batch, id_col, vec_col, bands, bits_per_band, dim)
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    if not presigned:
-        bidx.count()  # one Arrow pass, shared by every consumer; a
-        # presigned batch is a filter over an already-cached signature
-        # table — its cache fills on first use, no eager job needed
+        else embedding_index(batch, id_col, vec_col, bands, bits_per_band, dim),
+        fill=not presigned,
+        level=StorageLevel.MEMORY_AND_DISK,
+    )
 
     def fused(idx: DataFrame, bi: DataFrame) -> DataFrame:
         # ONE band probe for cross + intra (r14, guide §2.4 — two
@@ -1274,7 +1267,7 @@ def incremental_embedding_ingest(
         reported=reported,
         id_col=id_col,
     )
-    return _with_cached_deps(pairs, bidx), new_index, new_reported
+    return pairs, new_index, new_reported
 
 
 def ivf_assign(

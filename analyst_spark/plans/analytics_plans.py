@@ -735,9 +735,7 @@ def lineitem_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("l_extendedprice") * 100).cast("long")
         * (100 - F.round(F.col("l_discount") * 100).cast("long"))
     ).cast("decimal(28,0)")
-    from analyst_spark.functions.dedup import _with_cached_deps
-
-    out = (
+    return (
         li.groupBy("l_returnflag")
         .agg(
             F.count(F.lit(1)).alias("n_items"),
@@ -755,10 +753,6 @@ def lineitem_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("revenue"),
         )
     )
-    # thread the >2^22-bit regime's persisted word table (exposed on
-    # the semi-join result, lost by the transforms above) so
-    # release_cached can unpersist it (r13 advice)
-    return _with_cached_deps(out, *getattr(li, "_asp_cached_deps", []))
 
 
 LINEITEM_BLOOM_SEMIJOIN_ORACLE = """

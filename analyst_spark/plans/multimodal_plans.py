@@ -641,6 +641,7 @@ def multimodal_incremental_multiday(
     recall-1, so the DuckDB arithmetic twin is exact. History bytes
     are never re-decoded: each day's state is 16 bytes + id per
     image."""
+    from analyst_spark.functions.dedup import checkpoint, persist
     from analyst_spark.functions.multimodal import (
         image_dhash_bands,
         incremental_hamming_ingest,
@@ -653,13 +654,11 @@ def multimodal_incremental_multiday(
     # days. Generating once and signing once is also the plan shape
     # the docstring promises at 100 TB (decode each asset once; day
     # slices are signature-table reads).
-    fc = _fake_corpus(spark, sf_dir).persist()
+    fc = persist(_fake_corpus(spark, sf_dir), fill=False)
     is_new = F.col("doc_id") % 4 == 0
     day_of = F.expr("doc_id DIV 4") % 3
     hist = fc.filter(~is_new)
-    sigs_all = image_dhash_bands(fc, fan_out=False).persist()
-    sigs_all.count()
-    sigs_all._asp_skip_stats_count = True  # type: ignore[attr-defined]
+    sigs_all = persist(image_dhash_bands(fc, fan_out=False), fill=True)
     sig_of = lambda cond: sigs_all.filter(cond)  # noqa: E731
 
     def perturb(src: DataFrame, factor: int) -> DataFrame:
@@ -723,10 +722,7 @@ def multimodal_incremental_multiday(
         )
         .coalesce(n_state),
     ]
-    index = sig_of(~is_new).persist()
-    index.count()
-    index._asp_skip_stats_count = True  # type: ignore[attr-defined]
-    deps = [index, fc, sigs_all]
+    index = persist(sig_of(~is_new), fill=True)
     # State partition bound (r14, guide §2.2/§6): each day's index and
     # ledger are UNIONS of cached frames, so their partition counts
     # accumulate (~+96/day at sf0.1 — the r14 job decomposition
@@ -751,31 +747,27 @@ def multimodal_incremental_multiday(
             # (r14 sibling A/B: wall-neutral, fewer jobs)
             eager_batch_count=False,
         )
-        deps.extend(getattr(pairs, "_asp_cached_deps", []))
         # persist each day's pairs: the next day's ledger anti-join
         # and the final union both re-read them (the
         # dedup_incremental_multiday lesson — unpersisted, the probe
         # recomputes per consumer). The cache fills on first use (r14:
         # a dedicated count job per day bought nothing downstream).
-        pairs = pairs.persist()
-        deps.append(pairs)
+        pairs = persist(pairs, fill=False)
         # Day-boundary lineage truncation (VERDICT r12 #7): each day's
         # ingest re-plans the whole prior-day index/ledger chain
         # without a checkpoint. r14: LAZY checkpoints — the state
         # materializes inside its first consumer's job instead of a
         # dedicated per-day job, and day 3's index/ledger (dead state:
         # the entry returns only pairs) never materializes at all.
-        index = index.coalesce(n_state).localCheckpoint(eager=False)
-        # checkpointed state is materialized (on first use) and
-        # KB-sized; suppress the engine's per-day stats count — AQE
-        # sizes the probe joins from runtime shuffle stats
-        index._asp_skip_stats_count = True  # type: ignore[attr-defined]
-        reported = reported.coalesce(n_state).localCheckpoint(eager=False)
+        # Checkpointed state is materialized (on first use) and
+        # KB-sized; being recorded, it skips the engine's per-day stats
+        # count — AQE sizes the probe joins from runtime shuffle stats.
+        index = checkpoint(index.coalesce(n_state))
+        reported = checkpoint(reported.coalesce(n_state))
         tagged = pairs.select(
             F.lit(day).alias("day"), "id_batch", "id_hist", "hamming"
         )
         out = tagged if out is None else out.unionByName(tagged)
-    out._asp_cached_deps = deps  # type: ignore[attr-defined]
     return out
 
 

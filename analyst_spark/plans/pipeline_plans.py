@@ -23,7 +23,7 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from analyst_spark.functions.dedup import _with_cached_deps
+from analyst_spark.functions.dedup import persist
 from analyst_spark.tables import load_tables, spread
 
 # ------------------------------------------------- shared expressions
@@ -111,21 +111,21 @@ def contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcast (~8x less volume). A hash collision could only inflate
     # a count by claiming a non-benchmark 8-gram; at p ~ n²/2⁶⁴ that
     # is beyond negligible, and the oracle run would surface it.
-    toks = docs.select(
-        "doc_id", F.split(F.col("text"), " ").alias("t")
-    ).select(
-        "doc_id",
-        F.transform(
-            _ngrams(F.col("t"), _NGRAM_N), lambda g: F.xxhash64(g)
-        ).alias("gs"),
-    ).persist()
     # Consumed twice (benchmark side + corpus side) and the benchmark
     # side materializes eagerly as a broadcast subquery — unpersisted,
     # the whole scan→shingle→hash pipeline ran once per consumer
     # (measured 5s → 0.85s at sf0.1). At cluster scale: exchange/cache
     # reuse of the shingled table, the same device lsh_neardup_pairs
     # uses.
-    toks.count()
+    toks = persist(
+        docs.select("doc_id", F.split(F.col("text"), " ").alias("t")).select(
+            "doc_id",
+            F.transform(
+                _ngrams(F.col("t"), _NGRAM_N), lambda g: F.xxhash64(g)
+            ).alias("gs"),
+        ),
+        fill=True,
+    )
 
     bench = (
         toks.filter(F.col("doc_id") % _BENCH_MOD == 0)
@@ -139,7 +139,7 @@ def contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "n_ngrams")
         .agg(F.count(F.lit(1)).alias("n_matched"))
     )
-    return _with_cached_deps(
+    return (
         scored.withColumn(
             "overlap_ratio",
             F.round(F.col("n_matched") / F.col("n_ngrams"), 6),
@@ -147,8 +147,7 @@ def contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("overlap_ratio") >= 0.5)
         .select("doc_id", F.col("n_ngrams").cast("long").alias("n_ngrams"),
                 F.col("n_matched").cast("long").alias("n_matched"),
-                "overlap_ratio"),
-        toks,
+                "overlap_ratio")
     )
 
 
@@ -200,24 +199,24 @@ def contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     from analyst_spark.functions.bloom import bloom_semi_join
 
     docs = spread(load_tables(spark, sf_dir)["documents"], "doc_id")
-    toks = docs.select(
-        "doc_id", F.split(F.col("text"), " ").alias("t")
-    ).select(
-        "doc_id",
-        F.transform(
-            _ngrams(F.col("t"), _NGRAM_N), lambda g: F.xxhash64(g)
-        ).alias("gs"),
-    ).persist()
-    toks.count()
+    toks = persist(
+        docs.select("doc_id", F.split(F.col("text"), " ").alias("t")).select(
+            "doc_id",
+            F.transform(
+                _ngrams(F.col("t"), _NGRAM_N), lambda g: F.xxhash64(g)
+            ).alias("gs"),
+        ),
+        fill=True,
+    )
 
     # bench is consumed three times inside bloom_semi_join (sizing
     # count, filter build, exact verify): persist so the distinct runs
     # once. It is benchmark-sized, not corpus-sized.
-    bench = (
+    bench = persist(
         toks.filter(F.col("doc_id") % _BENCH_MOD == 0)
         .select(F.explode("gs").alias("g"))
-        .distinct()
-        .persist()
+        .distinct(),
+        fill=False,
     )
     exploded = toks.select(
         "doc_id", F.size("gs").alias("n_ngrams"), F.explode("gs").alias("g")
@@ -237,10 +236,7 @@ def contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "n_ngrams")
         .agg(F.count(F.lit(1)).alias("n_matched"))
     )
-    # in the >2^22-bit regime bloom_semi_join persists the word table
-    # and exposes it on its RESULT; transforms drop the attribute, so
-    # thread it into this entry's registered deps (r13 advice)
-    return _with_cached_deps(
+    return (
         scored.withColumn(
             "overlap_ratio",
             F.round(F.col("n_matched") / F.col("n_ngrams"), 6),
@@ -248,10 +244,7 @@ def contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("overlap_ratio") >= 0.5)
         .select("doc_id", F.col("n_ngrams").cast("long").alias("n_ngrams"),
                 F.col("n_matched").cast("long").alias("n_matched"),
-                "overlap_ratio"),
-        toks,
-        bench,
-        *getattr(semi, "_asp_cached_deps", []),
+                "overlap_ratio")
     )
 
 
@@ -282,14 +275,15 @@ def contamination_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB (shared _NGRAM_N / xxhash64 / ≥0.5 threshold), exact.
     """
     docs = spread(load_tables(spark, sf_dir)["documents"], "doc_id")
-    toks = docs.select(
-        "doc_id", F.split(F.col("text"), " ").alias("t")
-    ).select(
-        "doc_id",
-        F.transform(
-            _ngrams(F.col("t"), _NGRAM_N), lambda g: F.xxhash64(g)
-        ).alias("gs"),
-    ).persist()
+    toks = persist(
+        docs.select("doc_id", F.split(F.col("text"), " ").alias("t")).select(
+            "doc_id",
+            F.transform(
+                _ngrams(F.col("t"), _NGRAM_N), lambda g: F.xxhash64(g)
+            ).alias("gs"),
+        ),
+        fill=False,
+    )
     # shared by v1 grams, delta grams, and the scan; the cache fills
     # inside the delta-gram broadcast build (r14: the dedicated count
     # job did the same transform pass one job earlier, buying nothing)
@@ -317,7 +311,7 @@ def contamination_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "n_ngrams")
         .agg(F.count(F.lit(1)).alias("n_matched"))
     )
-    return _with_cached_deps(
+    return (
         scored.withColumn(
             "overlap_ratio",
             F.round(F.col("n_matched") / F.col("n_ngrams"), 6),
@@ -325,8 +319,7 @@ def contamination_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("overlap_ratio") >= 0.5)
         .select("doc_id", F.col("n_ngrams").cast("long").alias("n_ngrams"),
                 F.col("n_matched").cast("long").alias("n_matched"),
-                "overlap_ratio"),
-        toks,
+                "overlap_ratio")
     )
 
 
@@ -416,24 +409,26 @@ def delta_update_from_state(
     delta = _bench_gram_hashes(docs.select("doc_id", "text"), is_new).join(
         stored, "g", "left_anti"
     )
-    delta_grams = spark.createDataFrame(
-        [(r.g,) for r in delta.collect()], "g bigint"
-    ).persist()
-    delta_grams.count()  # broadcast side; real stats for the join
+    delta_grams = persist(  # broadcast side; real stats for the join
+        spark.createDataFrame([(r.g,) for r in delta.collect()], "g bigint"),
+        fill=True,
+    )
 
     # corpus scan side: identical to contamination_delta's tail —
     # persisted toks (the two-step hashed-gram shape is linear ONLY
     # through a persist barrier; r14 measured 228 s vs 2 s unpersisted
     # at 60k tokens)
-    toks = docs.filter(~is_v1 & ~is_new).select(
-        "doc_id", F.split(F.col("text"), " ").alias("t")
-    ).select(
-        "doc_id",
-        F.transform(
-            _ngrams(F.col("t"), _NGRAM_N), lambda g: F.xxhash64(g)
-        ).alias("gs"),
-    ).persist()
-    toks.count()
+    toks = persist(
+        docs.filter(~is_v1 & ~is_new)
+        .select("doc_id", F.split(F.col("text"), " ").alias("t"))
+        .select(
+            "doc_id",
+            F.transform(
+                _ngrams(F.col("t"), _NGRAM_N), lambda g: F.xxhash64(g)
+            ).alias("gs"),
+        ),
+        fill=True,
+    )
     exploded = toks.select(
         "doc_id", F.size("gs").alias("n_ngrams"), F.explode("gs").alias("g")
     )
@@ -442,7 +437,7 @@ def delta_update_from_state(
         .groupBy("doc_id", "n_ngrams")
         .agg(F.count(F.lit(1)).alias("n_matched"))
     )
-    return _with_cached_deps(
+    return (
         scored.withColumn(
             "overlap_ratio",
             F.round(F.col("n_matched") / F.col("n_ngrams"), 6),
@@ -450,9 +445,7 @@ def delta_update_from_state(
         .filter(F.col("overlap_ratio") >= 0.5)
         .select("doc_id", F.col("n_ngrams").cast("long").alias("n_ngrams"),
                 F.col("n_matched").cast("long").alias("n_matched"),
-                "overlap_ratio"),
-        toks,
-        delta_grams,
+                "overlap_ratio")
     )
 
 
@@ -1157,10 +1150,13 @@ def docs_shuffled_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregation: persist, or the corpus scan + tokenize + md5 key
     # pass runs once per consumer (the contamination_ngram lesson;
     # r12 review caught this entry re-deriving it).
-    order = seeded_shuffle(
-        toks, "doc_id", seed=_SHUFFLE_SEED,
-        rows_per_shard=_ROWS_PER_SHARD,
-    ).persist()
+    order = persist(
+        seeded_shuffle(
+            toks, "doc_id", seed=_SHUFFLE_SEED,
+            rows_per_shard=_ROWS_PER_SHARD,
+        ),
+        fill=False,
+    )
     placed = place_into_sequences(
         order, _SEQ_LEN, bucket_col="shard_id", order_col="pos"
     ).select(
@@ -1169,14 +1165,13 @@ def docs_shuffled_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         "seq_id",
         (F.col("shard_id") * F.lit(1 << 40) + F.col("pos")).alias("slot"),
     )
-    return _with_cached_deps(
+    return (
         placed.groupBy("seq_id").agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum("n_tok").cast("long").alias("n_tokens"),
             F.min_by("doc_id", "slot").alias("first_doc"),
             F.max_by("doc_id", "slot").alias("last_doc"),
-        ),
-        order,
+        )
     )
 
 
@@ -1670,15 +1665,14 @@ def lm_score_from_tokens(
         .select("doc_id", "g.w1", "g.w2")
     )
     if postings_storage != "NONE":
-        bg = bg.persist(postings_storage)  # consumed twice; see docstring
-        bg.count()
-    uni = (
+        # consumed twice; see docstring
+        bg = persist(bg, fill=True, level=postings_storage)
+    uni = persist(  # consumed by the vocab scalar AND the scoring join
         toks.select(F.explode("t").alias("w1"))
         .groupBy("w1")
-        .agg(F.count(F.lit(1)).alias("c1"))
-        .persist()  # consumed by the vocab scalar AND the scoring join
+        .agg(F.count(F.lit(1)).alias("c1")),
+        fill=True,
     )
-    uni.count()
     big = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
     vocab = uni.agg(F.count(F.lit(1)).alias("v"))
     micro = F.round(
@@ -1700,7 +1694,7 @@ def lm_score_from_tokens(
     scored = bg.join(pair_scores, ["w1", "w2"]).select("doc_id", "micro")
     n = F.count(F.lit(1))
     s = F.sum(F.col("micro"))
-    return _with_cached_deps(
+    return (
         scored.groupBy("doc_id")
         .agg(
             n.cast("long").alias("n_bigrams"),
@@ -1720,9 +1714,7 @@ def lm_score_from_tokens(
                 ),
                 4,
             ).alias("ppl"),
-        ),
-        bg,
-        uni,
+        )
     )
 
 
@@ -2082,14 +2074,17 @@ def docs_curriculum_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumed by BOTH the group-totals aggregation and the placement
     # join: persist, or the corpus scan + gopher battery runs twice
     # (the docs_shuffled_pack lesson)
-    within = keyed.select(
-        "doc_id",
-        "n_tok",
-        "tier",
-        "shard_id",
-        F.coalesce(F.sum("n_tok").over(w_off), F.lit(0)).alias("local_off"),
-        F.row_number().over(w_rn).cast("long").alias("pos"),
-    ).persist()
+    within = persist(
+        keyed.select(
+            "doc_id",
+            "n_tok",
+            "tier",
+            "shard_id",
+            F.coalesce(F.sum("n_tok").over(w_off), F.lit(0)).alias("local_off"),
+            F.row_number().over(w_rn).cast("long").alias("pos"),
+        ),
+        fill=False,
+    )
     # `within` is already hash-partitioned on (tier, shard_id) from
     # the window — Catalyst sees the partitioning satisfied and plans
     # NO extra exchange for this aggregation (the docs_token_budget_mix
@@ -2114,7 +2109,7 @@ def docs_curriculum_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
          + F.col("shard_id") * F.lit(1 << 24)
          + F.col("pos")).alias("slot"),
     )
-    return _with_cached_deps(
+    return (
         placed.groupBy("seq_id").agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum("n_tok").cast("long").alias("n_tokens"),
@@ -2122,8 +2117,7 @@ def docs_curriculum_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max_by("doc_id", "slot").alias("last_doc"),
             F.max("tier").cast("long").alias("tier_hi"),
             F.min("tier").cast("long").alias("tier_lo"),
-        ),
-        within,
+        )
     )
 
 
@@ -2221,12 +2215,15 @@ def docs_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-document sum (same hash-determinism device as docs_lm_score).
     """
     docs = load_tables(spark, sf_dir)["documents"]
-    tok = spread(docs).select(
-        "doc_id",
-        "lang",
-        F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("w"),
-    ).persist()  # consumed 4x: corpus counts, target counts, scalars, scoring
-    tok.count()
+    # consumed 4x: corpus counts, target counts, scalars, scoring
+    tok = persist(
+        spread(docs).select(
+            "doc_id",
+            "lang",
+            F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("w"),
+        ),
+        fill=True,
+    )
     cc = tok.groupBy("w").agg(F.count(F.lit(1)).alias("cc"))
     ct = (
         tok.filter(F.col("lang") == _DSIR_TARGET_LANG)
@@ -2262,7 +2259,7 @@ def docs_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = doc_words.join(word_scores, "w").select("doc_id", "m", "micro")
     n = F.sum("m")
     s = F.sum(F.col("m") * F.col("micro"))
-    return _with_cached_deps(
+    return (
         scored.groupBy("doc_id")
         .agg(
             n.cast("long").alias("n_tokens"),
@@ -2280,8 +2277,7 @@ def docs_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
                 4,
             ).alias("weight"),
-        ),
-        tok,
+        )
     )
 
 
@@ -2353,17 +2349,16 @@ def dup_span_from_tokens(toks: DataFrame) -> DataFrame:
     the other stages share (span identity is case-sensitive in Lee et
     al.). The fused funnel computes both token arrays in its single
     corpus scan and routes this one here (VERDICT r7 #1)."""
-    grams = (
-        toks
-        .select(
+    # consumed 3x: shared-gram table, per-doc totals, dup join
+    grams = persist(
+        toks.select(
             "doc_id",
             F.explode(
                 F.transform(_ngrams(F.col("t"), _DUP_N), lambda g: F.xxhash64(g))
             ).alias("g"),
-        )
-        .persist()  # consumed 3x: shared-gram table, per-doc totals, dup join
+        ),
+        fill=True,
     )
-    grams.count()
     shared = (
         grams.groupBy("g")
         .agg(F.count_distinct("doc_id").alias("nd"))
@@ -2376,7 +2371,7 @@ def dup_span_from_tokens(toks: DataFrame) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_dup"))
     )
-    return _with_cached_deps(
+    return (
         per_doc.join(dup, "doc_id", "left")
         .select(
             "doc_id",
@@ -2385,8 +2380,7 @@ def dup_span_from_tokens(toks: DataFrame) -> DataFrame:
             F.round(
                 F.coalesce(F.col("n_dup"), F.lit(0)) / F.col("n_ngrams"), 6
             ).alias("dup_ratio"),
-        ),
-        grams,
+        )
     )
 
 
@@ -2430,8 +2424,8 @@ def _funnel_token_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     run — the dominant avoidable cost of the most expensive headline
     entry). Now parquet is read once and the text split exactly twice
     (the two genuinely different tokenizations), and every stage plan
-    starts from this persisted columnar frame. Returned persisted;
-    callers must register it via _with_cached_deps for release.
+    starts from this persisted columnar frame, recorded for
+    release_cached.
 
     Storage medium follows the corpus size (same policy as
     _lm_postings_storage): below _LM_POSTINGS_MEM_DOCS the frame is
@@ -2445,15 +2439,17 @@ def _funnel_token_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = spread(load_tables(spark, sf_dir)["documents"], "doc_id")
     big = _corpus_count(spark, sf_dir) > _LM_POSTINGS_MEM_DOCS
-    base = docs.select(
-        "doc_id",
-        F.split(F.trim(F.lower("text")), r"\s+").alias("t"),
-        F.split(F.col("text"), " ").alias("ts"),
-    ).persist(
-        StorageLevel.DISK_ONLY if big else StorageLevel.MEMORY_AND_DISK_DESER
+    return persist(
+        docs.select(
+            "doc_id",
+            F.split(F.trim(F.lower("text")), r"\s+").alias("t"),
+            F.split(F.col("text"), " ").alias("ts"),
+        ),
+        fill=True,
+        level=(
+            StorageLevel.DISK_ONLY if big else StorageLevel.MEMORY_AND_DISK_DESER
+        ),
     )
-    base.count()
-    return base
 
 
 def docs_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2468,9 +2464,6 @@ def docs_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: all stages derive from ONE shared corpus scan/tokenization
     (_funnel_token_base), joined on doc_id and reduced to four rows.
     """
-    # capture the component frames BEFORE .select(): _asp_cached_deps
-    # does not propagate through projections (tests/test_dedup.py pins
-    # that), so deps must be read off the original frames
     base_tok = _funnel_token_base(spark, sf_dir)
     g0 = gopher_features_from_tokens(base_tok.select("doc_id", "t"))
     d0 = dup_span_from_tokens(
@@ -2546,10 +2539,7 @@ def docs_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.col("n_docs"), F.lit(0)).cast("long").alias("n_docs"),
         F.coalesce(F.col("n_tokens"), F.lit(0)).cast("long").alias("n_tokens"),
     )
-    deps = [base_tok]
-    for comp in (g0, d0, lm0):
-        deps.extend(getattr(comp, "_asp_cached_deps", []))
-    return _with_cached_deps(out, *deps)
+    return out
 
 
 DOCS_FUNNEL_ORACLE = rf"""
@@ -2601,8 +2591,8 @@ def _funnel_scored_base(spark: SparkSession, sf_dir: str):
     """The funnel's shared per-document scored frame (r12 review:
     v2 and v3 had accumulated two ~95-line copies of this wiring):
     ONE corpus scan/tokenization, the four component frames joined on
-    doc_id into (doc_id, toks, keep, margin, dup_ratio, ppl), plus
-    the cached deps the caller must register. The pass chain and the
+    doc_id into (doc_id, toks, keep, margin, dup_ratio, ppl). The
+    pass chain and the
     stage report are built on top by _funnel_pass_chain /
     _funnel_stage_report."""
     from analyst_spark.functions.classifier import (
@@ -2633,10 +2623,7 @@ def _funnel_scored_base(spark: SparkSession, sf_dir: str):
         .join(d0.select("doc_id", "dup_ratio"), "doc_id", "left")
         .join(lm0.select("doc_id", "ppl"), "doc_id", "left")
     )
-    deps = [base_tok]
-    for comp in (g0, d0, lm0):
-        deps.extend(getattr(comp, "_asp_cached_deps", []))
-    return base_tok, joined, deps
+    return base_tok, joined
 
 
 def _funnel_pass_chain():
@@ -2713,7 +2700,7 @@ def docs_curation_funnel_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     (_funnel_token_base, VERDICT r7 #1) instead of each re-loading
     and re-splitting `documents`.
     """
-    base_tok, joined, deps = _funnel_scored_base(spark, sf_dir)
+    base_tok, joined = _funnel_scored_base(spark, sf_dir)
     p1, p2, p3, p4 = _funnel_pass_chain()
     base = joined.select(
         "toks",
@@ -2723,7 +2710,7 @@ def docs_curation_funnel_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         (1, "raw", None), (2, "gopher", "p1"), (3, "classifier", "p2"),
         (4, "dedup", "p3"), (5, "lm", "p4"),
     ])
-    return _with_cached_deps(out, *deps)
+    return out
 
 
 def _qc_frozen_values() -> str:
@@ -2845,7 +2832,7 @@ def docs_curation_funnel_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     the funnel. All six stages remain exact-integer, so the composed
     report is fully hash-gated.
     """
-    base_tok, joined, deps = _funnel_scored_base(spark, sf_dir)
+    base_tok, joined = _funnel_scored_base(spark, sf_dir)
     # decontamination flags from the shared ts split. The hashed-gram
     # frame feeds both the bench side and the corpus side (the
     # contamination_ngram device); below the memory threshold it is
@@ -2862,8 +2849,7 @@ def docs_curation_funnel_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("gs"),
     )
     if not big:
-        grams = grams.persist()
-        grams.count()
+        grams = persist(grams, fill=True)
     bench = (
         grams.filter(F.col("doc_id") % _BENCH_MOD == 0)
         .select(F.explode("gs").alias("g"))
@@ -2892,8 +2878,7 @@ def docs_curation_funnel_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
         (1, "raw", None), (2, "gopher", "p1"), (3, "classifier", "p2"),
         (4, "dedup", "p3"), (5, "lm", "p4"), (6, "decontaminate", "p5"),
     ])
-    deps = deps + ([] if big else [grams])
-    return _with_cached_deps(out, *deps)
+    return out
 
 
 def _funnel_v3_oracle() -> str:
@@ -3252,17 +3237,16 @@ def docs_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = gopher_features(docs).select(
         "doc_id", F.col("keep").cast("double").alias("y")
     )
-    stats = dense_quality_stats(docs).persist()
+    stats = persist(dense_quality_stats(docs), fill=False)
     w, b = train_quality_irls(stats, labels)
     scored = score_quality_dense(stats, w, b)
-    return _with_cached_deps(
+    return (
         scored.join(labels, "doc_id").select(
             "doc_id",
             "score",
             (F.col("score") >= 0.5).alias("pred"),
             (F.col("y") >= 0.5).alias("label"),
-        ),
-        stats,
+        )
     )
 
 
@@ -3387,17 +3371,15 @@ def docs_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     N, R = _DUP_N, _SPAN_MIN_RUN
     docs = spread(load_tables(spark, sf_dir)["documents"], "doc_id")
     toks = docs.select("doc_id", F.split(F.col("text"), " ").alias("t"))
-    grams = (
+    grams = persist(  # consumed 2x: shared table + join back
         toks.select(
             "doc_id",
             F.posexplode(
                 F.transform(_ngrams(F.col("t"), N), lambda g: F.xxhash64(g))
             ).alias("i0", "g"),
-        )
-        .select("doc_id", (F.col("i0") + 1).alias("i"), "g")
-        .persist()  # consumed 2x: shared table + join back
+        ).select("doc_id", (F.col("i0") + 1).alias("i"), "g"),
+        fill=True,
     )
-    grams.count()
     shared = (
         grams.groupBy("g")
         .agg(F.count_distinct("doc_id").alias("nd"))
@@ -3421,7 +3403,7 @@ def docs_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             "starts", lambda s: (p >= s) & (p <= s + F.lit(N - 1))
         ).cast("int"),
     )
-    d = d.withColumn("cov", cov).persist()
+    d = persist(d.withColumn("cov", cov), fill=False)
     # win[q] = 1 iff tokens q..q+R-1 are ALL covered
     win = F.when(
         n_t >= R,
@@ -3435,8 +3417,7 @@ def docs_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ),
     ).otherwise(F.array().cast("array<boolean>"))
-    d_cov = d
-    d = d.withColumn("win", win).persist()
+    d = persist(d.withColumn("win", win), fill=False)
     # rm[p] = p lies inside SOME fully-covered R-window  <=>  p is in
     # a maximal covered run of length >= R
     rm = F.transform(
@@ -3453,15 +3434,14 @@ def docs_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).otherwise(F.lit(False)),
     )
-    d_win = d
-    d = d.withColumn("rm", rm).persist()
+    d = persist(d.withColumn("rm", rm), fill=False)
     kept = F.transform(
         F.filter(
             F.sequence(F.lit(1), n_t), lambda p: ~F.element_at("rm", p)
         ),
         lambda p: F.element_at("t", p),
     )
-    return _with_cached_deps(
+    return (
         d.select(
             "doc_id",
             n_t.cast("long").alias("n_tokens"),
@@ -3469,11 +3449,7 @@ def docs_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "rm", F.lit(0), lambda a, x: a + x.cast("int")
             ).cast("long").alias("n_removed"),
             F.md5(F.array_join(kept, " ")).alias("clean_md5"),
-        ),
-        grams,
-        d_cov,
-        d_win,
-        d,
+        )
     )
 
 
@@ -3557,7 +3533,7 @@ def docs_lm_backoff_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         F.split(F.trim(F.lower("text")), r"\s+").alias("t"),
     )
-    tri = (
+    tri = persist(  # consumed by target counts AND the scoring join
         toks.filter(F.size("t") >= 3)
         .select(
             "doc_id",
@@ -3573,15 +3549,11 @@ def docs_lm_backoff_score(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("g"),
         )
-        .select("doc_id", "lang", "g.w1", "g.w2", "g.w3")
-        .persist()  # consumed by target counts AND the scoring join
+        .select("doc_id", "lang", "g.w1", "g.w2", "g.w3"),
+        fill=True,
     )
-    tri.count()
-    uni = (
-        toks.select("lang", F.explode("t").alias("w"))
-        .persist()  # consumed 3x: target uni/bigram counts + vocab
-    )
-    uni.count()
+    # consumed 3x: target uni/bigram counts + vocab
+    uni = persist(toks.select("lang", F.explode("t").alias("w")), fill=True)
     t_uni = (
         uni.filter(F.col("lang") == _DSIR_TARGET_LANG)
         .groupBy("w")
@@ -3652,7 +3624,7 @@ def docs_lm_backoff_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = tri.join(tri_scores, ["w1", "w2", "w3"]).select("doc_id", "micro")
     n = F.count(F.lit(1))
     ssum = F.sum("micro")
-    return _with_cached_deps(
+    return (
         scored.groupBy("doc_id")
         .agg(
             n.cast("long").alias("n_trigrams"),
@@ -3672,9 +3644,7 @@ def docs_lm_backoff_score(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
                 4,
             ).alias("ppl_proxy"),
-        ),
-        tri,
-        uni,
+        )
     )
 
 
@@ -3790,7 +3760,9 @@ def docs_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist the ENTIRE LM scorer runs twice (measured: 31 jobs /
     # 68 stages for this entry vs 17 jobs for docs_lm_score alone).
     # The cache fills inside the cuts broadcast job; no eager count.
-    binned = scored.select("doc_id", "lang", qbin.alias("qbin")).persist()
+    binned = persist(
+        scored.select("doc_id", "lang", qbin.alias("qbin")), fill=False
+    )
     hist = binned.groupBy("lang", "qbin").agg(
         F.count(F.lit(1)).alias("cnt")
     )
@@ -3815,9 +3787,7 @@ def docs_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = binned.join(F.broadcast(cuts), ["lang", "qbin"]).select(
         "doc_id", "lang", "qbin", "bucket"
     )
-    return _with_cached_deps(
-        out, binned, *getattr(lm, "_asp_cached_deps", [])
-    )
+    return out
 
 
 DOCS_PPL_BUCKETS_ORACLE = rf"""
@@ -4055,7 +4025,7 @@ def docs_rrf_hybrid_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=_RRF_MULTI_K,
         rrf_k=_RRF_KCONST,
     )
-    return _with_cached_deps(fused, *getattr(bm, "_asp_cached_deps", ()))
+    return fused
 
 
 def _rrf_multi_oracle() -> str:
@@ -4160,9 +4130,7 @@ def docs_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=_RRF_FINAL_K,
         rrf_k=_RRF_KCONST,
     )
-    # bm's persisted token/length frames must outlive the projection
-    # (_asp_cached_deps does not survive .select()).
-    return _with_cached_deps(fused, *getattr(bm, "_asp_cached_deps", ()))
+    return fused
 
 
 DOCS_RRF_ORACLE = f"""
@@ -4280,8 +4248,7 @@ def dedup_cluster_quality_rep(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = minhash_pairs(
         docs, n=_SHINGLE_N, bands=_BANDS, rows_per_band=_ROWS_PER_BAND
     )
-    cc_raw = connected_components(pairs)
-    cc = cc_raw.select(
+    cc = connected_components(pairs).select(
         F.col("node").cast("long").alias("doc_id"),
         F.col("component").cast("long").alias("cluster_id"),
     )
@@ -4302,9 +4269,6 @@ def dedup_cluster_quality_rep(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_id").alias("rep_id"),
             F.col("n_members").cast("long").alias("n_members"),
         )
-    )
-    out._asp_cached_deps = list(  # type: ignore[attr-defined]
-        getattr(cc_raw, "_asp_cached_deps", [])
     )
     return out
 

@@ -349,14 +349,10 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, n=_SHINGLE_N, bands=_BANDS, rows_per_band=_ROWS_PER_BAND
     )
     cc = connected_components(pairs)
-    out = cc.select(
+    return cc.select(
         F.col("node").cast("long").alias("doc_id"),
         F.col("component").cast("long").alias("cluster_id"),
     )
-    out._asp_cached_deps = list(  # type: ignore[attr-defined]
-        getattr(cc, "_asp_cached_deps", ())
-    )
-    return out
 
 
 DEDUP_CLUSTERS_ORACLE = f"""
@@ -669,10 +665,10 @@ def dedup_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: (stage, n) for raw / exact / verified_pairs / final.
     """
     from analyst_spark.functions.cluster import connected_components
-    from analyst_spark.functions.dedup import _with_cached_deps
+    from analyst_spark.functions.dedup import persist
 
     docs = load_tables(spark, sf_dir)["documents"]
-    survivors = exact_dedup(docs).persist()
+    survivors = persist(exact_dedup(docs), fill=False)
     pairs = lsh_verified_pairs(
         survivors,
         n=_SHINGLE_N,
@@ -684,12 +680,10 @@ def dedup_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         # its adaptive dup scan) is known-useless here
         collapse_exact=False,
     )
-    pair_deps = getattr(pairs, "_asp_cached_deps", ())
-    # consumed twice — eagerly by connected_components (whose
-    # localCheckpoint materializes it) and again by the
-    # verified_pairs stage count — persist so the verify chain runs
-    # once per invocation
-    pairs = pairs.persist()
+    # consumed twice — by connected_components (whose edge checkpoint
+    # materializes it) and again by the verified_pairs stage count —
+    # persist so the verify chain runs once per invocation
+    pairs = persist(pairs, fill=False)
     cc = connected_components(pairs.select("id_a", "id_b"))
     removed = cc.filter(F.col("component") < F.col("node")).agg(
         F.count(F.lit(1)).alias("r")
@@ -708,15 +702,11 @@ def dedup_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("e") - F.col("r")).cast("long").alias("n"),
         )
     )
-    out = (
+    return (
         stage("raw", docs)
         .unionByName(stage("exact", survivors))
         .unionByName(stage("verified_pairs", pairs))
         .unionByName(final)
-    )
-    return _with_cached_deps(
-        out, survivors, pairs, *pair_deps,
-        *getattr(cc, "_asp_cached_deps", ()),
     )
 
 
@@ -1424,15 +1414,11 @@ def contamination_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = incremental_embedding_pairs(
         bench, train, _NEARDUP_THRESHOLD, dim=64
     )
-    res = out.select(
+    return out.select(
         F.col("id_batch").alias("train_id"),
         F.col("id_hist").alias("bench_id"),
         "cosine_sim",
     )
-    res._asp_cached_deps = list(  # type: ignore[attr-defined]
-        getattr(out, "_asp_cached_deps", ())
-    )
-    return res
 
 
 CONTAMINATION_EMBEDDING_ORACLE = f"""
@@ -1487,6 +1473,7 @@ def dedup_incremental_embedding_multiday(
     index (the append proof); factor 4 proves same-day intra-batch
     pairing. Output (day, id_batch, id_hist, cosine_sim); the DuckDB
     twin is the brute-force day-ordered cosine join."""
+    from analyst_spark.functions.dedup import checkpoint, persist
     from analyst_spark.functions.similarity import (
         embedding_index,
         incremental_embedding_ingest,
@@ -1515,15 +1502,16 @@ def dedup_incremental_embedding_multiday(
     # over overlapping vectors, and at gate scale each pandas-UDF
     # pass carries fixed Arrow/worker latency that dominated the
     # entry's near-constant-across-decades wall.
-    sigs_all = embedding_index(emb).persist()
-    sigs_all.count()
-    twin_sigs = embedding_index(
-        twins(hist.filter(F.col("vec_id") % _TWIN_STEP == 0), 1)
-        .unionByName(twins(emb.filter(F.col("vec_id") % 60 == 0), 2))
-        .unionByName(twins(emb.filter(F.col("vec_id") % 60 == 40), 3))
-        .unionByName(twins(emb.filter(F.col("vec_id") % 60 == 20), 4))
-    ).persist()
-    twin_sigs.count()
+    sigs_all = persist(embedding_index(emb), fill=True)
+    twin_sigs = persist(
+        embedding_index(
+            twins(hist.filter(F.col("vec_id") % _TWIN_STEP == 0), 1)
+            .unionByName(twins(emb.filter(F.col("vec_id") % 60 == 0), 2))
+            .unionByName(twins(emb.filter(F.col("vec_id") % 60 == 40), 3))
+            .unionByName(twins(emb.filter(F.col("vec_id") % 60 == 20), 4))
+        ),
+        fill=True,
+    )
     factor = F.expr(f"vec_id DIV {_EMB_MD_OFF}")
     batch_sigs = [
         sigs_all.filter(is_new & (day_of == 0)).unionByName(
@@ -1536,9 +1524,7 @@ def dedup_incremental_embedding_multiday(
             twin_sigs.filter(factor >= 3)
         ),
     ]
-    index = sigs_all.filter(~is_new).persist()
-    index.count()
-    deps = [index, sigs_all, twin_sigs]
+    index = persist(sigs_all.filter(~is_new), fill=True)
     # State partition bound (r14, guide §2.2): day state and batches
     # are UNIONS of cached frames, so partition counts accumulate and
     # every downstream job over them launches that many near-empty
@@ -1553,26 +1539,23 @@ def dedup_incremental_embedding_multiday(
             index, batch.coalesce(n_state), _NEARDUP_THRESHOLD, reported,
             dim=64, presigned=True,
         )
-        deps.extend(getattr(pairs, "_asp_cached_deps", []))
         # persist each day's pairs: the next day's ledger anti-join
         # and the final union both re-read them. The cache fills on
         # first use (r14: a dedicated count job per day bought nothing
         # downstream).
-        pairs = pairs.persist()
-        deps.append(pairs)
+        pairs = persist(pairs, fill=False)
         # Day-boundary lineage truncation (VERDICT r12 #7): each day's
         # ingest re-plans the whole prior-day index/ledger chain
         # without a checkpoint. r14: LAZY checkpoints — the state
         # materializes inside its first consumer's job instead of a
         # dedicated per-day job, and day 3's index/ledger (dead state:
         # the entry returns only pairs) never materializes at all.
-        index = index.coalesce(n_state).localCheckpoint(eager=False)
-        reported = reported.coalesce(n_state).localCheckpoint(eager=False)
+        index = checkpoint(index.coalesce(n_state))
+        reported = checkpoint(reported.coalesce(n_state))
         tagged = pairs.select(
             F.lit(day).alias("day"), "id_batch", "id_hist", "cosine_sim"
         )
         out = tagged if out is None else out.unionByName(tagged)
-    out._asp_cached_deps = deps  # type: ignore[attr-defined]
     return out
 
 
@@ -1690,6 +1673,7 @@ def dedup_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from analyst_spark.functions.dedup import (
         incremental_neardup_pairs,
         neardup_signature_index,
+        persist,
     )
 
     docs = spread(load_tables(spark, sf_dir)["documents"], "doc_id").select(
@@ -1707,11 +1691,13 @@ def dedup_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = docs.filter(is_new).unionByName(twins)
     # persist the index: it feeds BOTH the bucket join and the verify
     # join (at scale it is a stored table, not a recomputation)
-    index = neardup_signature_index(
-        hist, n=_SHINGLE_N, bands=_BANDS, rows_per_band=_ROWS_PER_BAND
-    ).persist()
-    index.count()
-    out = incremental_neardup_pairs(
+    index = persist(
+        neardup_signature_index(
+            hist, n=_SHINGLE_N, bands=_BANDS, rows_per_band=_ROWS_PER_BAND
+        ),
+        fill=True,
+    )
+    return incremental_neardup_pairs(
         index,
         batch,
         n=_SHINGLE_N,
@@ -1719,10 +1705,6 @@ def dedup_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows_per_band=_ROWS_PER_BAND,
         min_match=_INEAR_MIN_MATCH,
     )
-    out._asp_cached_deps = list(
-        getattr(out, "_asp_cached_deps", [])
-    ) + [index]
-    return out
 
 
 def _incremental_neardup_oracle() -> str:
@@ -1802,16 +1784,18 @@ def dedup_incremental_multiday(
     from analyst_spark.functions.dedup import (
         incremental_neardup_ingest,
         neardup_signature_index,
+        persist,
     )
 
     # ONE scan + fan-out shared by the ~7 signing pipelines (history
     # index + three day batches with their twin branches): unpersisted,
     # each pipeline re-read the parquet and re-paid the spread()
     # exchange (r15; the cache fills inside the first consumer's job)
-    docs = (
-        spread(load_tables(spark, sf_dir)["documents"], "doc_id")
-        .select("doc_id", "text")
-        .persist()
+    docs = persist(
+        spread(load_tables(spark, sf_dir)["documents"], "doc_id").select(
+            "doc_id", "text"
+        ),
+        fill=False,
     )
     toks = F.split(F.trim(F.col("text")), r"\s+")
     drop1 = F.array_join(
@@ -1840,11 +1824,12 @@ def dedup_incremental_multiday(
         .unionByName(twins(docs.filter(F.col("doc_id") % 60 == 40), 3))
         .unionByName(twins(docs.filter(F.col("doc_id") % 60 == 20), 4)),
     ]
-    index = neardup_signature_index(
-        hist, n=_SHINGLE_N, bands=_BANDS, rows_per_band=_ROWS_PER_BAND
-    ).persist()
-    index.count()
-    deps = [index, docs]
+    index = persist(
+        neardup_signature_index(
+            hist, n=_SHINGLE_N, bands=_BANDS, rows_per_band=_ROWS_PER_BAND
+        ),
+        fill=True,
+    )
     reported = None
     out = None
     for day, batch in enumerate(batches, start=1):
@@ -1857,7 +1842,6 @@ def dedup_incremental_multiday(
             rows_per_band=_ROWS_PER_BAND,
             min_match=_INEAR_MIN_MATCH,
         )
-        deps.extend(getattr(pairs, "_asp_cached_deps", []))
         # persist each day's pairs: day d+1's LEDGER anti-join and
         # the final 3-day union both re-read them — unpersisted they
         # recomputed the whole probe per consumer (bench: 9.1s → the
@@ -1872,9 +1856,7 @@ def dedup_incremental_multiday(
         # cold first pass) — minhash signing is cheap enough per day
         # that the extra full-corpus signing pass plus the coalesced
         # union day-slices cost more than they save; reverted.
-        pairs = pairs.persist()
-        pairs.count()
-        deps.append(pairs)
+        pairs = persist(pairs, fill=True)
         # Day-state partition bound (r15, guide §2.2): new_index and
         # new_reported are UNIONS of cached frames, so their partition
         # counts accumulate (+32/day at sf0.1 — the r14 job
@@ -1884,20 +1866,16 @@ def dedup_incremental_multiday(
         # persist() — NOT a lazy localCheckpoint: persist keeps the
         # cached-parent size statistics the probe's broadcast planning
         # reads (the r14 lazy-checkpoint experiment flipped the probe
-        # joins to sort-merge, task-sec 41.7 → 70.3). The skip flag
-        # suppresses the probe's own eager count: an unmaterialized
-        # InMemoryRelation still exposes its child's stats, and the
-        # cache fills inside the next consumer's job.
+        # joins to sort-merge, task-sec 41.7 → 70.3). Not filled: an
+        # unmaterialized InMemoryRelation still exposes its child's
+        # stats, and the cache fills inside the next consumer's job.
         n_state = spark.sparkContext.defaultParallelism
-        index = index.coalesce(n_state).persist()
-        index._asp_skip_stats_count = True  # type: ignore[attr-defined]
-        reported = reported.coalesce(n_state).persist()
-        deps.extend([index, reported])
+        index = persist(index.coalesce(n_state), fill=False)
+        reported = persist(reported.coalesce(n_state), fill=False)
         tagged = pairs.select(
             F.lit(day).alias("day"), "id_batch", "id_hist", "n_match"
         )
         out = tagged if out is None else out.unionByName(tagged)
-    out._asp_cached_deps = deps  # type: ignore[attr-defined]
     return out
 
 
@@ -1973,20 +1951,15 @@ def dedup_incremental_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from analyst_spark.functions.cluster import connected_components
 
     pairs = dedup_incremental_multiday(spark, sf_dir)
-    deps = list(getattr(pairs, "_asp_cached_deps", []))
     cc = connected_components(
         pairs.select(
             F.col("id_batch").alias("id_a"), F.col("id_hist").alias("id_b")
         )
     )
-    out = cc.select(
+    return cc.select(
         F.col("node").cast("long").alias("doc_id"),
         F.col("component").cast("long").alias("cluster_id"),
     )
-    out._asp_cached_deps = deps + list(  # type: ignore[attr-defined]
-        getattr(cc, "_asp_cached_deps", [])
-    )
-    return out
 
 
 DEDUP_INCREMENTAL_CLUSTERS_ORACLE = f"""

@@ -5,7 +5,15 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from analyst_spark.session import get_spark
+# get_spark asks for a 32g JVM heap; the whole suite shares one JVM,
+# which grows toward that cap and is killed mid-suite on a 15 GB host.
+# The test corpora are KB-sized: cap the heap at launch (the submit
+# argument wins over the memory setting get_spark configures).
+os.environ.setdefault(
+    "PYSPARK_SUBMIT_ARGS", "--driver-memory 4g pyspark-shell"
+)
+
+from analyst_spark.session import get_spark  # noqa: E402
 
 
 @pytest.fixture(scope="session")
@@ -34,3 +42,10 @@ NEARDUP_LONG_A = " ".join(f"alpha{i} beta{i} gamma{i}" for i in range(12))
 
 def drop_first_token(text: str) -> str:
     return text.split(" ", 1)[1]
+
+
+def persistent_rdds(spark) -> dict:
+    """{RDD id: storage level} of every RDD the session holds
+    persisted — caches and local checkpoints alike."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(k): rdds[k].getStorageLevel() for k in rdds}

@@ -10,14 +10,13 @@
    odd quote without a dot keeps the pre-r9 safe-doubling behavior.
 3. (low) jaccard_prefix_pairs persists + materializes the prefix
    frame before the self-join (real statistics; computed once, not
-   once per join side) and releases it via _asp_cached_deps.
-4. (low) the eager pair builders grow eager_stats=False so a fully
-   lazy composition path exists again; results are identical.
+   once per join side) and release_cached releases it.
 """
 
 import pytest
 
 from analyst_spark.sources.pgwire import quote_ident
+from tests.conftest import persistent_rdds
 
 
 class TestQuoteIdentHardening:
@@ -75,46 +74,18 @@ class TestPairBuilderLaziness:
             ],
             ["doc_id", "text"],
         )
+        before = persistent_rdds(spark)
         out = jaccard_prefix_pairs(df, "text", "doc_id", n=3)
-        deps = getattr(out, "_asp_cached_deps", [])
-        assert len(deps) == 2, "shingles AND prefix must be released"
-        assert all(d.storageLevel.useMemory for d in deps)
+        # both fills ran at construction: shingles AND prefix are held
+        held = {
+            k: v for k, v in persistent_rdds(spark).items() if k not in before
+        }
+        assert len(held) == 2, "shingles AND prefix must be cached"
+        assert all(level.useMemory() for level in held.values())
         rows = out.collect()
         assert {(r.id_a, r.id_b) for r in rows} == {(1, 2)}
         release_cached(out)
-        assert all(not d.storageLevel.useMemory for d in deps)
-
-    def test_eager_stats_false_builds_without_jobs(self, spark):
-        from analyst_spark.functions.dedup import (
-            containment_pairs,
-            jaccard_prefix_pairs,
-            ngram_jaccard_pairs,
-            release_cached,
-        )
-
-        df = spark.createDataFrame(
-            [
-                (1, "alpha beta gamma delta epsilon zeta"),
-                (2, "alpha beta gamma delta epsilon eta"),
-            ],
-            ["doc_id", "text"],
-        )
-        tracker = spark.sparkContext.statusTracker()
-        before = len(tracker.getJobIdsForGroup(None) or [])
-        lazy_prefix = jaccard_prefix_pairs(df, eager_stats=False)
-        lazy_cont = containment_pairs(df, eager_stats=False)
-        lazy_ngram = ngram_jaccard_pairs(df, eager_stats=False)
-        after = len(tracker.getJobIdsForGroup(None) or [])
-        assert after == before, "eager_stats=False must run NO jobs"
-        # results identical to the eager forms
-        eager = jaccard_prefix_pairs(df)
-        assert sorted(map(tuple, lazy_prefix.collect())) == sorted(
-            map(tuple, eager.collect())
-        )
-        assert lazy_cont.count() == containment_pairs(df).count()
-        assert lazy_ngram.count() == ngram_jaccard_pairs(df).count()
-        for frame in (lazy_prefix, lazy_cont, lazy_ngram, eager):
-            release_cached(frame)
+        assert not held.keys() & persistent_rdds(spark).keys()
 
 
 class TestContainmentCap:

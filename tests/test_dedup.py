@@ -9,6 +9,7 @@ from analyst_spark.functions.dedup import (
     shingle_tokens,
     simhash_signatures,
 )
+from tests.conftest import persistent_rdds
 
 BASE = "the quick brown fox jumps over the lazy dog again and again today"
 NEAR = "the quick brown fox jumps over the lazy cat again and again today"
@@ -117,12 +118,13 @@ def test_connected_components_non_integral_ids(spark):
 def test_release_cached_unpersists_intermediates(spark):
     from analyst_spark.functions.dedup import minhash_pairs, release_cached
 
+    before = persistent_rdds(spark)
     out = minhash_pairs(_docs(spark))
     out.collect()
-    deps = out._asp_cached_deps
-    assert deps and all(d.storageLevel.useMemory for d in deps)
+    held = {k: v for k, v in persistent_rdds(spark).items() if k not in before}
+    assert held and all(level.useMemory() for level in held.values())
     release_cached(out)
-    assert all(not d.storageLevel.useMemory for d in deps)
+    assert not held.keys() & persistent_rdds(spark).keys()
 
 
 def test_exact_dedup_single_shuffle(spark):
@@ -141,7 +143,7 @@ def test_exact_dedup_single_shuffle(spark):
     # actual Exchange nodes: the spread() repartition + the min_by agg
     assert len(re.findall(r"\(\d+\) Exchange", plan)) <= 2
     assert "Join" not in plan
-    assert not getattr(df, "_asp_cached_deps", ())
+    assert "InMemoryRelation" not in plan
 
 
 def test_minhash_arbitrary_signature_width(spark):

@@ -321,7 +321,6 @@ class TestLedgerCompaction:
                 emitted[tag] = sorted(
                     (r.id_batch, r.id_hist) for r in pairs.collect()
                 )
-                release_cached(pairs)
                 # shared corpus event in BOTH runs: docs older than
                 # RETENTION days leave the corpus (drop from index)
                 horizon_id = (day - self.RETENTION + 1) * self.DAY_SIZE
@@ -346,6 +345,9 @@ class TestLedgerCompaction:
                 ledger_sizes[tag].append(
                     load_state(spark, f"{path}/s{day}")[1].count()
                 )
+                # after the state write: new_led reads this day's
+                # ledger checkpoint, which release frees
+                release_cached(pairs)
             assert emitted["u"] == emitted["c"], f"day {day} diverged"
             assert emitted["u"], f"day {day} found no twins (fixture)"
             all_emitted.update(emitted["u"])

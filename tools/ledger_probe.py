@@ -80,7 +80,6 @@ def main() -> None:
                     idx, batch, led, max_distance=0
                 )
                 n_pairs = pairs.count()
-                release_cached(pairs)
                 horizon_id = (day - RETENTION + 1) * day_size
                 new_idx = new_idx.filter(F.col("doc_id") >= horizon_id)
                 if tag == "c" and day % COMPACT_EVERY == 0:
@@ -88,6 +87,9 @@ def main() -> None:
                         new_led, new_idx.select("doc_id")
                     )
                 save_state(new_idx, new_led, f"{root}/{tag}/s{day}")
+                # after the write: new_led reads the day's ledger
+                # checkpoint, which release frees
+                release_cached(pairs)
                 wall = time.time() - t0
                 led_n = load_state(spark, f"{root}/{tag}/s{day}")[1].count()
                 row.append(f"{wall:6.2f}s / {led_n:8d}")

@@ -19,13 +19,6 @@ Subcommands:
       events grown along the TIME axis (copies shifted by k×span, same
       users/series): the spine the gapfill plan actually walks.
 
-  cachefill [copies]
-      VERDICT #7: jaccard_prefix_pairs eager_stats=True (cache-fill
-      job before planning) vs eager_stats=False with auto-broadcast
-      disabled for the session — OOM-safety with less upfront cost?
-      Times both on the near-clone ×copies corpus; results equal by
-      construction (same plan semantics), wall clock decides.
-
   zorder [copies]    histogram via decade4_probe --copies 1000
       lineitem replicated ×copies (orderkey/partkey/suppkey offset per
       copy); times lineitem_zorder_layout.
@@ -207,39 +200,6 @@ def main_gapfill() -> None:
         print(f"ratio last/first = {rows[-1][1] / rows[0][1]:.2f}x", flush=True)
 
 
-def main_cachefill() -> None:
-    from analyst_spark.functions.dedup import jaccard_prefix_pairs
-
-    copies = int(sys.argv[2]) if len(sys.argv) > 2 else 10
-    spark = get_spark("r10_cachefill")
-    big = near_clone_corpus(
-        load_tables(spark, SRC)["documents"], copies
-    ).persist()
-    print(f"near-clone corpus: {big.count()} docs ({copies} copies)", flush=True)
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    for label, eager, no_bcast in (
-        ("eager_stats=True (cache-fill job)", True, False),
-        ("eager_stats=False + autoBroadcast=-1", False, True),
-    ):
-        best, pairs = None, None
-        for _ in range(2):
-            if no_bcast:
-                spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            try:
-                t0 = time.time()
-                out = jaccard_prefix_pairs(big, eager_stats=eager)
-                pairs = out.count()
-                dt = time.time() - t0
-                release_cached(out)
-            finally:
-                if no_bcast:
-                    spark.conf.set(
-                        "spark.sql.autoBroadcastJoinThreshold", thresh
-                    )
-            best = dt if best is None else min(best, dt)
-        print(f"{label}: {best:7.2f}s  pairs={pairs}", flush=True)
-
-
 def main_zorder() -> None:
     from analyst_spark.plans.catalog import QUERIES
 
@@ -290,6 +250,5 @@ if __name__ == "__main__":
         "containment": main_containment,
         "incremental": main_incremental,
         "gapfill": main_gapfill,
-        "cachefill": main_cachefill,
         "zorder": main_zorder,
     }[mode]()

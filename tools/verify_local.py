@@ -7,7 +7,11 @@ rows sorted by their full value tuple, floats rounded to 9 sig
 places before hashing to absorb last-bit noise the real driver may or
 may not tolerate — we aim for exact anyway). A hash-gated entry that
 returns 0 rows FAILS: an empty result matches an empty oracle
-trivially.
+trivially. An entry that leaves a persisted RDD behind after
+``release_cached`` FAILS too (``leaked_rdds`` in the report): the
+catalog runs in long-lived sessions, where every leaked cache or
+local checkpoint stays pinned. Ids are compared, not counts — the
+ContextCleaner may drop older RDDs meanwhile.
 
 Usage: python tools/verify_local.py [--json out.json] [query ...]
 
@@ -701,6 +705,10 @@ BANDED_CHECKS = {
 }
 
 
+def persistent_rdd_ids(spark) -> set[int]:
+    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs()}
+
+
 def main(names, json_path=None):
     import __spark_entry__ as entrymod
     from analyst_spark.session import get_spark
@@ -721,8 +729,9 @@ def main(names, json_path=None):
         t0 = time.time()
         rec = {"rows_match": None, "schema_match": None,
                "hash_match": None, "spark_rows": None,
-               "oracle_rows": None, "err": None}
+               "oracle_rows": None, "err": None, "leaked_rdds": None}
         report[name] = rec
+        before = persistent_rdd_ids(spark)
         try:
             df = qs[name](spark, SF_DIR)
             srows = df.collect()
@@ -739,6 +748,14 @@ def main(names, json_path=None):
             print(f"FAIL  {name}: spark error: {e}")
             continue
         rec["spark_rows"] = len(srows)
+        rec["leaked_rdds"] = sorted(persistent_rdd_ids(spark) - before)
+        if rec["leaked_rdds"]:
+            failures.append(name)
+            rec["err"] = "leak"
+            print(f"FAIL  {name}: {len(rec['leaked_rdds'])} persisted RDDs "
+                  f"left after release_cached: {rec['leaked_rdds']} "
+                  f"[{time.time()-t0:.1f}s]")
+            continue
         if name not in oracles:
             if name in BANDED_CHECKS:
                 try:
